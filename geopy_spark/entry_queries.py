@@ -1052,10 +1052,11 @@ JOIN (SELECT * FROM events WHERE event_type = 'click') c
 
 def q_connected_components(spark, sf_dir):
     """Iterative DataFrame computation (the surface class knn shares):
-    exact connected components via hash-min label propagation
-    (operators/graph) over a deterministic star+chain graph derived from
-    customer keys — stars of 10 keys around each decade base, chain
-    edges merging runs of decades (every third run broken). The oracle
+    exact connected components (operators/graph: driver union-find
+    under the size guard, star contraction above it) over a
+    deterministic star+chain graph derived from customer keys — stars
+    of 10 keys around each decade base, chain edges merging runs of
+    decades (every third run broken). The oracle
     recomputes the same components with a DuckDB RECURSIVE CTE
     (transitive min-label closure), so component ids, sizes and node
     checksums are all hash-gated. This is the exact upgrade of EP-4's

@@ -89,6 +89,19 @@ def _substr_hashes(cp1: np.ndarray, l: np.ndarray, r: np.ndarray,
     return (pre[r] + p - pre[l] * pw[r - l] % p) % p
 
 
+# _substr_hashes' uint64 cumsum of residues < 2^31 is exact only while
+# n * 2^31 < 2^64; past this many codepoints hashes are silently wrong
+MAX_BATCH_CODEPOINTS = 2 ** 33
+
+
+def check_batch_codepoints(n: int) -> None:
+    """Refuse a concatenated batch the prefix sums cannot hash exactly."""
+    if n >= MAX_BATCH_CODEPOINTS:
+        raise ValueError(
+            f"shingle batch of {n} codepoints reaches the exact-hash limit "
+            f"of {MAX_BATCH_CODEPOINTS}; hash it in smaller batches")
+
+
 _EMPTY_HASH = np.array([0], dtype=np.uint64)  # hash of "" is 0 in both rolls
 
 
@@ -140,7 +153,8 @@ def shingle_hashes_batch(texts, ngram: int = 3
     rolls, reproducing the per-doc [0] sentinel through the same path.
     The uint64 cumsum in _substr_hashes stays exact while the CONCATENATED
     batch is < 2^33 codepoints — Arrow batches are capped far below that
-    (2048 rows/batch session default)."""
+    (2048 rows/batch session default), and a larger batch raises
+    ValueError (check_batch_codepoints) instead of hashing wrongly."""
     norms = [" ".join(str(t).lower().split()) for t in texts]
     nd = len(norms)
     if nd == 0:
@@ -149,6 +163,7 @@ def shingle_hashes_batch(texts, ngram: int = 3
     dlen = np.fromiter((len(s) for s in norms), dtype=np.int64, count=nd)
     off = np.zeros(nd + 1, dtype=np.int64)
     np.cumsum(dlen, out=off[1:])
+    check_batch_codepoints(int(off[-1]))
     blob = "".join(norms)
     cp1 = np.frombuffer(blob.encode("utf-32-le"), dtype=np.uint32
                         ).astype(np.uint64)

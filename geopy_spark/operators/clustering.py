@@ -54,7 +54,7 @@ def dbscan(points: DataFrame, eps_m: float, min_pts: int, *,
     local checkpoints only as the explicit local-mode default).
     ``cc_algorithm``: "auto" (default — driver union-find under the
     graph.DRIVER_CC_MAX_EDGES size guard, distributed star loop above
-    it), "star", or "hashmin".
+    it) or "star".
 
     Pair-stream discipline (optimization round, VERDICT r5 #1): the eps
     pair multiset — Σ|N_eps(p)| rows, potentially orders of magnitude

@@ -3,21 +3,18 @@ the min-id survivor rule in jobs/corpus_pipeline.py: near-dup pairs form
 a graph whose components are the duplicate clusters; keeping min(id) per
 COMPONENT — not per neighborhood — is the exact dedup semantics).
 
-Two algorithms behind one API:
+One distributed algorithm, plus a driver-side solver for small graphs:
 
-* ``star`` (default): alternating large-star / small-star contraction
+* ``star``: alternating large-star / small-star contraction
   (Kiveris et al., "Connected Components in MapReduce and Beyond",
   SoCC'14 — public algorithm). Each phase is one shuffle (a groupBy-min
   over the oriented edge set plus a re-join), and the edge set contracts
   toward per-component stars rooted at the component minimum in
   O(log n) rounds — so a 10^6-node path graph converges in ~20 rounds
-  where plain label propagation needs 10^6. This removes the round-2
-  long-chain failure mode (max_iter raise on high-diameter graphs).
-* ``hashmin``: the round-2 hash-min label propagation — every node
-  repeatedly adopts the min label among itself and its neighbors; one
-  shuffle per round, O(diameter) rounds. Kept because for the dominant
-  workload (near-clique duplicate clusters, diameter 2-4) it does
-  strictly less work per round than star contraction.
+  where plain label propagation needs 10^6.
+* ``auto`` (default): graphs at or below a size guard are collected and
+  labelled by a numpy union-find on the driver; larger graphs run the
+  star loop.
 
 Fault tolerance at scale: per-round lineage MUST be truncated (with
 persist() alone each round's analyzed plan nests the previous round's —
@@ -32,8 +29,6 @@ failing the job.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,8 +41,7 @@ from pyspark.sql import functions as F
 # multi-second fixed cost per round (checkpoint + fixpoint-test jobs)
 # that a small graph never amortizes — measured on the DBSCAN bench
 # graph (44k edges): star loop ~6 s, driver union-find < 0.1 s.
-DRIVER_CC_MAX_EDGES = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES",
-                                         str(4_000_000)))
+DRIVER_CC_MAX_EDGES = 4_000_000
 
 
 def _checkpointer(df_like: DataFrame, checkpoint_dir: str | None):
@@ -71,11 +65,11 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
     graphs of ≤ ``driver_max_edges`` rows with a driver-side vectorized
     union-find (identical labels, none of the per-round distributed
     fixed costs), falling back to "star" above the guard.
-    algorithm="star" converges in O(log n) rounds on ANY graph shape;
-    "hashmin" needs O(diameter) rounds and raises visibly at
-    ``max_iter`` (a guard, not a silent truncation). checkpoint_dir=None
-    uses executor-local checkpoints (single-node / local mode); give a
-    durable path for executor-loss-safe iteration on a real cluster.
+    algorithm="star" converges in O(log n) rounds on ANY graph shape and
+    raises visibly at ``max_iter`` (a guard, not a silent truncation).
+    checkpoint_dir=None uses executor-local checkpoints (single-node /
+    local mode); give a durable path for executor-loss-safe iteration on
+    a real cluster.
     """
     if algorithm == "auto":
         cap = DRIVER_CC_MAX_EDGES if driver_max_edges is None \
@@ -85,8 +79,6 @@ def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
         return _cc_star(pairs, a, b, max_iter, checkpoint_dir)
     if algorithm == "star":
         return _cc_star(pairs, a, b, max_iter, checkpoint_dir)
-    if algorithm == "hashmin":
-        return _cc_hashmin(pairs, a, b, max_iter, checkpoint_dir)
     raise ValueError(f"unknown algorithm {algorithm!r}")
 
 
@@ -97,7 +89,7 @@ def _cc_driver(pairs: DataFrame, a: str, b: str) -> DataFrame:
     the minimum label in its closed neighborhood, then compresses
     label chains to their roots — O(E) numpy per round, O(log n)
     rounds), and return (node, component = min node id). Labels are
-    identical to the distributed algorithms' by construction: dense
+    identical to the distributed algorithm's by construction: dense
     indexes are assigned in sorted-id order, so the minimum dense index
     of a component maps back to its minimum node id."""
     pdf = pairs.select(F.col(a).cast("long").alias("u"),
@@ -198,31 +190,3 @@ def _cc_star(pairs: DataFrame, a: str, b: str, max_iter: int,
                          F.col("v").alias("component"))
     return (nodes.join(stars, "node", "left")
             .select("node", F.coalesce("component", "node").alias("component")))
-
-
-def _cc_hashmin(pairs: DataFrame, a: str, b: str, max_iter: int,
-                checkpoint_dir: str | None) -> DataFrame:
-    ckpt = _checkpointer(pairs, checkpoint_dir)
-    edges = (pairs.select(F.col(a).alias("u"), F.col(b).alias("v"))
-             .unionByName(pairs.select(F.col(b).alias("u"),
-                                       F.col(a).alias("v")))
-             .distinct())
-    labels = (edges.select(F.col("u").alias("node")).distinct()
-              .withColumn("label", F.col("node")))
-    edges = ckpt(edges)
-    labels = ckpt(labels)
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges.v == labels.node)
-                   .groupBy("u").agg(F.min("label").alias("nbr_label")))
-        new = ckpt(labels.join(nbr_min, labels.node == nbr_min.u, "left")
-                   .select(F.col("node"),
-                           F.col("label").alias("old_label"),
-                           F.least(F.col("label"),
-                                   F.coalesce(F.col("nbr_label"),
-                                              F.col("label"))).alias("label")))
-        changed = new.filter(F.col("label") < F.col("old_label")).count()
-        labels = new.select("node", "label")
-        if changed == 0:
-            return labels.withColumnRenamed("label", "component")
-    raise RuntimeError(f"connected_components(hashmin): no fixpoint in "
-                       f"{max_iter} rounds")

@@ -114,39 +114,27 @@ def polygon_cover_udf(ring: Column, level: int,
     return _cover(ring, *_holes_transport(holes))
 
 
-def geom_key(ring: Column = None, holes: Column = None,
-             poly_id: Column = None) -> Column:
-    """JVM-side geometry identity: xxhash64 of the JSON-rendered rings
-    (+ poly_id). Computed ONCE per region row BEFORE the cover explode
-    and carried through the candidate join as a narrow long — so pip_udf
-    can group exactly by geometry with ZERO per-candidate python cost
-    (review r5: the per-row fingerprint loop ran on the fact side)."""
-    cols = []
-    if poly_id is not None:
-        cols.append(poly_id)
-    cols.append(F.to_json(F.struct((ring if ring is not None
-                                    else F.col("ring")).alias("r"))))
-    if holes is not None:
-        cols.append(F.to_json(F.struct(holes.alias("h"))))
-    return F.xxhash64(*cols)
+def geom_key(ring: Column, holes: Column, poly_id: Column) -> Column:
+    """JVM-side geometry identity: xxhash64 of poly_id and the
+    JSON-rendered rings. Computed ONCE per region row BEFORE the cover
+    explode and carried through the candidate join as a narrow long — so
+    pip_udf can group exactly by geometry with ZERO per-candidate python
+    cost."""
+    return F.xxhash64(poly_id, F.to_json(F.struct(ring.alias("r"))),
+                      F.to_json(F.struct(holes.alias("h"))))
 
 
-def pip_udf(lat: Column, lon: Column, poly_id: Column, ring: Column,
-            holes: Column | None = None,
-            group: Column | None = None) -> Column:
+def pip_udf(lat: Column, lon: Column, geom: Column, ring: Column,
+            holes: Column | None = None) -> Column:
     """Exact point-in-polygon test (G5) — outer ring minus interior
-    rings — vectorized per polygon group within each Arrow batch
-    (candidate pairs arrive clustered by polygon).
+    rings — vectorized per geometry group within each Arrow batch
+    (candidate pairs arrive clustered by geometry).
 
-    Grouping must distinguish GEOMETRY, not just poly_id (ADVICE r4
-    medium): MultiPolygon PARTS share poly_id, and a batch holding rows
-    of two parts must test each row against ITS OWN ring. The fast path
-    is ``group`` — a precomputed per-geometry key (geom_key(), a narrow
-    long carried from the region side; vectorized int64 groupby, no
-    per-candidate python). Without it, a per-row O(1) fingerprint
-    (vertex count, first/middle outer vertices, hole count) sub-groups
-    each poly_id — correct but python-per-row; the engine's operators
-    all pass ``group``."""
+    ``geom`` is the per-geometry key (see geom_key: a narrow long carried
+    from the region side; vectorized int64 groupby, no per-candidate
+    python). Grouping must distinguish GEOMETRY, not just poly_id:
+    MultiPolygon PARTS share poly_id, and a batch holding rows of two
+    parts must test each row against ITS OWN ring."""
     @F.pandas_udf(BooleanType())
     def _pip_grouped(la: pd.Series, lo: pd.Series, grp: pd.Series,
                      rg: pd.Series, hf: pd.Series,
@@ -163,40 +151,65 @@ def pip_udf(lat: Column, lon: Column, poly_id: Column, ring: Column,
                                           holes=holes_np)
         return pd.Series(out)
 
-    @F.pandas_udf(BooleanType())
-    def _pip(la: pd.Series, lo: pd.Series, pid: pd.Series,
-             rg: pd.Series, hf: pd.Series, hs: pd.Series) -> pd.Series:
-        out = np.zeros(len(la), dtype=bool)
-        la_np = la.to_numpy(np.float64)
-        lo_np = lo.to_numpy(np.float64)
-        fps = np.empty(len(pid), dtype=object)
-        rg_vals, hf_vals = rg.values, hf.values
-        for i in range(len(pid)):
-            # full-geometry fingerprint (ADVICE r5: the old sampled
-            # fingerprint — vertex count + first/middle vertex + hole
-            # count — could collide for MultiPolygon parts differing
-            # only in unsampled vertices or hole shape, silently testing
-            # rows against the wrong ring). This fallback only runs for
-            # pre-round-5 covers lacking __geom; engine operators all
-            # pass ``group``.
-            fps[i] = hash((
-                _np_ring(rg_vals[i]).tobytes(),
-                _np_ring(hf_vals[i]).tobytes() if len(hf_vals[i])
-                else b""))
-        groups = pd.Series(range(len(pid))).groupby(
-            [pid.values, fps]).groups.items()
-        for _, idx in groups:
-            ii = np.asarray(idx)
-            ring_np = _np_ring(rg.iloc[ii[0]])
-            holes_np = _np_holes(hf.iloc[ii[0]], hs.iloc[ii[0]])
-            out[ii] = P.points_in_polygon(la_np[ii], lo_np[ii], ring_np,
-                                          holes=holes_np)
-        return pd.Series(out)
+    return _pip_grouped(lat, lon, geom, ring, *_holes_transport(holes))
 
-    if group is not None:
-        return _pip_grouped(lat, lon, group, ring,
-                            *_holes_transport(holes))
-    return _pip(lat, lon, poly_id, ring, *_holes_transport(holes))
+
+def _prep_regions(regions: DataFrame) -> DataFrame:
+    """Shared region-side prep. A handful of polygons spread over
+    createDataFrame's default N partitions pays N python-worker warmups
+    for rows that fit in one Arrow batch — compact the vector side
+    before its cover UDF (coalesce never increases partition count, so
+    this is a no-op for already-compact inputs). Interior rings are
+    opt-in by column presence: a frame without `holes` is solid."""
+    regions = regions.coalesce(8)
+    if "holes" not in regions.columns:
+        regions = regions.withColumn(
+            "holes", F.array().cast("array<array<array<double>>>"))
+    return regions
+
+
+def _region_cover(regions: DataFrame, level: int,
+                  compact: bool = False) -> DataFrame:
+    """The one point⋈polygon cover builder (batch, bucketed store and
+    stream): explode each region into its covering cells, carrying the
+    ids, geometry and bbox the residual needs. The per-geometry key is computed once
+    per REGION row (small side) and carried as a narrow long: the PIP
+    residual groups by it, so MultiPolygon parts sharing a poly_id are
+    each tested against their own ring at zero per-candidate cost."""
+    regions = _prep_regions(regions)
+    regions = regions.withColumn("__geom", geom_key(
+        F.col("ring"), F.col("holes"), F.col("poly_id")))
+    return (regions
+            .withColumn("cell", F.explode(polygon_cover_udf(
+                F.col("ring"), level, holes=F.col("holes"),
+                compact=compact)))
+            .select("cell", "poly_id", "__geom", "ring", "holes",
+                    "lat_min", "lat_max", "lon_min", "lon_max"))
+
+
+def _pip_residual(cand: DataFrame) -> DataFrame:
+    """The one candidate → exact-pairs residual: bbox prune (Column
+    algebra, drops most false cover hits), then the vectorized PIP
+    grouped by ``__geom``. Raises on candidates from a cover without the
+    geometry key (written before it existed) — rebuild the cover."""
+    if "__geom" not in cand.columns:
+        raise ValueError(
+            "cover lacks the __geom geometry key; rebuild it with "
+            "polystore.write_region_cover_bucketed (stored covers) or "
+            "streaming.spatial.region_cover (stream covers)")
+    cand = cand.filter(
+        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max")) &
+        (F.col("lon") >= F.col("lon_min")) & (F.col("lon") <= F.col("lon_max")))
+    if not cand.isStreaming:
+        # cluster candidates by geometry inside each partition (local
+        # sort, no shuffle) so every Arrow batch holds long single-
+        # geometry runs — the vectorized PIP then does one ring setup per
+        # run instead of one per (batch, polygon) pair; measured 185s →
+        # seconds at 600k x 2k. Spark disallows sorts on unaggregated
+        # streams: there the setup is paid per (batch, geometry).
+        cand = cand.sortWithinPartitions("__geom")
+    return cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("__geom"),
+                               F.col("ring"), holes=F.col("holes")))
 
 
 def spatial_join(points: DataFrame, regions: DataFrame, *,
@@ -241,45 +254,18 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     ceiling. Ignored on the salted-SMJ path (mixed-level keys would
     break hot-cell detection).
     """
-    # a handful of polygons spread over createDataFrame's default N
-    # partitions pays N python-worker warmups for rows that fit in one
-    # Arrow batch — compact the vector side before its cover UDF
-    # (coalesce never increases partition count, so this is a no-op for
-    # already-compact inputs; no df.rdd plan conversion needed)
-    regions_in = regions  # memo key: the caller's (immutable) frame
-    regions = regions.coalesce(8)
-    # interior rings are opt-in by column presence: a regions frame
-    # without `holes` behaves exactly as before (solid polygons)
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
-    # per-geometry key, computed once per REGION row (small side) and
-    # carried as a narrow long: the PIP residual groups by it, so
-    # MultiPolygon parts sharing a poly_id are each tested against their
-    # own ring at zero per-candidate cost
-    regions = regions.withColumn("__geom", geom_key(
-        F.col("ring"), F.col("holes"), F.col("poly_id")))
-    cov = (regions
-           .withColumn("cell", F.explode(polygon_cover_udf(
-               F.col("ring"), level, holes=F.col("holes"))))
-           .select("cell", "poly_id", "__geom", "ring", "holes",
-                   "lat_min", "lat_max", "lon_min", "lon_max"))
-
     pts = points.withColumn("cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
 
     if broadcast_regions is None:
-        broadcast_regions = (_cover_estimate(regions_in, level)
+        # memo key: the caller's (immutable) frame, not a prepared one
+        broadcast_regions = (_cover_estimate(regions, level)
                              <= BROADCAST_MAX_COVER_ROWS)
+    cov = _region_cover(regions, level,
+                        compact=broadcast_regions and compact_cover)
 
     if broadcast_regions:
         if compact_cover:
             from ..functions.cells import cell_parent_expr
-            cov = (regions
-                   .withColumn("cell", F.explode(polygon_cover_udf(
-                       F.col("ring"), level, holes=F.col("holes"),
-                       compact=True)))
-                   .select("cell", "poly_id", "__geom", "ring", "holes",
-                           "lat_min", "lat_max", "lon_min", "lon_max"))
             # probe with the ancestor chain: disjoint mixed-level cover
             # ⇒ at most one of these level+1 cells matches per polygon
             pts = (points
@@ -316,23 +302,11 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
             pts, cov, "cell", hot=hot, factor=salt_factor,
             big_salt_expr=F.pmod(F.hash(F.col(point_id)), F.lit(salt_factor)))
 
-    cand = cand.filter(
-        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max")) &
-        (F.col("lon") >= F.col("lon_min")) & (F.col("lon") <= F.col("lon_max")))
-
-    # cluster candidates by geometry inside each partition (local sort,
-    # no shuffle) so every Arrow batch holds long single-geometry runs —
-    # the vectorized PIP then does one ring setup per run instead of one
-    # per (batch, polygon) pair; measured 185s → seconds at 600k x 2k
-    cand = cand.sortWithinPartitions("__geom")
-
-    hit = cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("poly_id"),
-                              F.col("ring"), holes=F.col("holes"),
-                              group=F.col("__geom")))
     # keep_point_cols ride for free: the candidate join already carries
     # every point column, so consumers (e.g. zonal_stats) avoid a second
     # points-side shuffle to re-attach values by id
-    return hit.select(point_id, "poly_id", *(keep_point_cols or []))
+    return _pip_residual(cand).select(point_id, "poly_id",
+                                      *(keep_point_cols or []))
 
 
 # ------------------------------------------------------- polygon ⋈ polygon
@@ -361,14 +335,6 @@ def polygons_intersect_udf(ring_a: Column, holes_a: Column | None,
         return pd.Series(out)
     return _pi(ring_a, *_holes_transport(holes_a),
                ring_b, *_holes_transport(holes_b))
-
-
-def _prep_polys(df: DataFrame) -> DataFrame:
-    df = df.coalesce(8)
-    if "holes" not in df.columns:
-        df = df.withColumn("holes",
-                           F.array().cast("array<array<array<double>>>"))
-    return df
 
 
 def polygon_join(left: DataFrame, right: DataFrame, *,
@@ -401,7 +367,7 @@ def polygon_join(left: DataFrame, right: DataFrame, *,
     twice and filter l_id < r_id for unordered pairs (the join emits
     both orders and the diagonal).
     """
-    L, R = _prep_polys(left), _prep_polys(right)
+    L, R = _prep_regions(left), _prep_regions(right)
     if broadcast_right is None:
         broadcast_right = (_cover_estimate(right, level)
                            <= BROADCAST_MAX_COVER_ROWS)

@@ -17,6 +17,14 @@ write and hash-bucketed by `cell`:
   one hash Exchange to match the cover's bucketing; the cover side
   still reads shuffle-free and UDF-free.
 
+The cover is built and the candidates resolved by the batch operator's
+own helpers (operators/spatial_join ``_region_cover`` and
+``_pip_residual``), so stored and computed covers carry the same
+columns and give the same pairs; this module keeps only the bucketed
+write and its join step. A cover table written without the ``__geom``
+geometry key is refused with a ValueError — rewrite it with
+write_region_cover_bucketed.
+
 Skew note: the bucketed path cannot salt hot cells (salting would break
 the bucket alignment it exists to exploit). For layers with pathological
 hot cells keep the plain operator's salted path; the store targets the
@@ -29,33 +37,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cells import cell_encode_udf
-from ..operators.spatial_join import (DEFAULT_LEVEL, geom_key, pip_udf,
-                                      polygon_cover_udf)
+from ..operators.spatial_join import (DEFAULT_LEVEL, _pip_residual,
+                                      _region_cover)
 from .bucketed import write_bucketed
-
-COVER_COLS = ("cell", "poly_id", "__geom", "ring", "holes",
-              "lat_min", "lat_max", "lon_min", "lon_max")
 
 
 def write_region_cover_bucketed(regions: DataFrame, table_fqn: str, *,
                                 level: int = DEFAULT_LEVEL,
                                 n_buckets: int = 16) -> None:
     """One-time cover materialization: run the polygon-cover UDF over the
-    layer ONCE, explode to (cell, poly_id, ring, holes, bbox) rows, and
+    layer ONCE, explode to the batch operator's cover rows (cell,
+    poly_id, __geom, ring, holes, bbox), and
     write hash-bucketed + sorted by `cell`. Pick n_buckets for the TARGET
     scale (each bucket should stay executor-memory-sized) and reuse the
     SAME count for the points side."""
-    regions = regions.coalesce(8)
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
-    regions = regions.withColumn("__geom", geom_key(
-        F.col("ring"), F.col("holes"), F.col("poly_id")))
-    cov = (regions
-           .withColumn("cell", F.explode(polygon_cover_udf(
-               F.col("ring"), level, holes=F.col("holes"))))
-           .select(*COVER_COLS))
-    write_bucketed(cov, table_fqn, "cell", n_buckets=n_buckets)
+    write_bucketed(_region_cover(regions, level), table_fqn, "cell",
+                   n_buckets=n_buckets)
     # record the cover level so later ad-hoc joins can refuse a mismatch
     # (joining level-7 point cells against a level-6 cover silently
     # returns nothing — fail loudly instead)
@@ -103,9 +100,8 @@ def spatial_join_bucketed(spark: SparkSession, points_fqn: str,
             f"cell-level mismatch: {points_fqn} bucketed at level {lv_p}, "
             f"{cover_fqn} covered at level {lv_c} — the join would "
             f"silently return nothing")
-    pts = spark.table(points_fqn)
-    cov = spark.table(cover_fqn)
-    return _residual_join(pts, cov, point_id)
+    cand = spark.table(points_fqn).join(spark.table(cover_fqn), "cell")
+    return _pip_residual(cand).select(point_id, "poly_id")
 
 
 def spatial_join_against_cover(points: DataFrame, spark: SparkSession,
@@ -124,26 +120,6 @@ def spatial_join_against_cover(points: DataFrame, spark: SparkSession,
             f"join requested level {level}")
     pts = points.withColumn(
         "cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
-    cov = spark.table(cover_fqn)
-    return _residual_join(pts, cov, point_id)
+    cand = pts.join(spark.table(cover_fqn), "cell")
+    return _pip_residual(cand).select(point_id, "poly_id")
 
-
-def _residual_join(pts: DataFrame, cov: DataFrame,
-                   point_id: str) -> DataFrame:
-    """Shared candidate → bbox-prune → PIP-residual tail; groups the PIP
-    by the stored per-geometry key when the cover carries one (covers
-    written before round-5's __geom column fall back to the fingerprint
-    path inside pip_udf — correct either way)."""
-    grp = F.col("__geom") if "__geom" in cov.columns else None
-    cand = pts.join(cov, "cell").filter(
-        (F.col("lat") >= F.col("lat_min")) & (F.col("lat") <= F.col("lat_max"))
-        & (F.col("lon") >= F.col("lon_min"))
-        & (F.col("lon") <= F.col("lon_max")))
-    # local sort clusters each partition's candidates by geometry so the
-    # vectorized PIP pays one ring setup per run — narrow op, no Exchange
-    cand = cand.sortWithinPartitions("__geom" if grp is not None
-                                     else "poly_id")
-    hit = cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("poly_id"),
-                              F.col("ring"), holes=F.col("holes"),
-                              group=grp))
-    return hit.select(point_id, "poly_id")

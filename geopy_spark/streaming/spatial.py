@@ -7,11 +7,13 @@ Plan shape: the polygon side is prepared ONCE as an exploded cell cover
 (static, broadcast into every micro-batch — stream-static equi-joins are
 stateless in Structured Streaming, so no join state accumulates), each
 micro-batch encodes point cells in a vectorized Arrow UDF, joins on
-`cell`, prunes with the bbox Column filter, and applies the exact PIP
-residual. Containment semantics are byte-identical to the batch G6
-operator: same cover (conservative superset), same bbox prune, same
-outer-minus-holes PIP kernel — a pytest pins streamed pairs == batch
-spatial_join pairs on the same rows.
+`cell`, and hands the candidates to the batch operator's residual.
+Both the cover and the residual are the batch G6 operator's own helpers
+(operators/spatial_join ``_region_cover`` and ``_pip_residual``: same
+cover, same bbox prune, same outer-minus-holes PIP kernel grouped by
+the ``__geom`` geometry key), so containment semantics are identical —
+a pytest pins streamed pairs == batch spatial_join pairs on the same
+rows.
 
 Scale notes (10^12-image firehose): per-batch work is a narrow map +
 broadcast hash join — no shuffle before the windowed aggregation, whose
@@ -30,7 +32,8 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
 from ..functions.cells import cell_encode_udf
-from ..operators.spatial_join import DEFAULT_LEVEL, pip_udf, polygon_cover_udf
+from ..operators.spatial_join import (DEFAULT_LEVEL, _pip_residual,
+                                      _region_cover)
 
 # streamed point rows: id + event time + position
 POINT_STREAM_SCHEMA = StructType([
@@ -65,20 +68,7 @@ def region_cover(regions: DataFrame, level: int = DEFAULT_LEVEL) -> DataFrame:
     The first trigger pays the cover computation and fills the cache;
     callers that tear a query down may cov.unpersist() (blocks are also
     LRU-evicted under memory pressure, so leaking one is benign)."""
-    from ..operators.spatial_join import geom_key
-
-    regions = regions.coalesce(8)
-    if "holes" not in regions.columns:
-        regions = regions.withColumn(
-            "holes", F.array().cast("array<array<array<double>>>"))
-    regions = regions.withColumn("__geom", geom_key(
-        F.col("ring"), F.col("holes"), F.col("poly_id")))
-    return (regions
-            .withColumn("cell", F.explode(polygon_cover_udf(
-                F.col("ring"), level, holes=F.col("holes"))))
-            .select("cell", "poly_id", "__geom", "ring", "holes",
-                    "lat_min", "lat_max", "lon_min", "lon_max")
-            .persist())
+    return _region_cover(regions, level).persist()
 
 
 def spatial_join_stream(stream: DataFrame, regions: DataFrame, *,
@@ -90,11 +80,13 @@ def spatial_join_stream(stream: DataFrame, regions: DataFrame, *,
     polygon table → streaming (point_id, ts, poly_id) pairs.
 
     ``regions`` may be the raw polygon frame (cover computed here) or an
-    already-exploded region_cover() result (reused across queries).
-    Unlike the batch path there is no poly_id clustering sort (Spark
-    disallows sorts on unaggregated streams); pip_udf groups by polygon
-    WITHIN each Arrow batch, so correctness is unchanged and the per-ring
-    setup cost is paid per (batch, polygon) instead of per run.
+    already-exploded region_cover() result (reused across queries); a
+    pre-exploded cover without the ``__geom`` key raises ValueError —
+    rebuild it with region_cover(). Unlike the batch path there is no
+    geometry clustering sort (Spark disallows sorts on unaggregated
+    streams); pip_udf groups by geometry WITHIN each Arrow batch, so
+    correctness is unchanged and the per-ring setup cost is paid per
+    (batch, geometry) instead of per run.
 
     ``watermark``: when downstream does windowed aggregation, set the
     watermark HERE, before the join — the watermark node tracks max
@@ -106,15 +98,7 @@ def spatial_join_stream(stream: DataFrame, regions: DataFrame, *,
     cov = regions if "cell" in regions.columns else region_cover(regions, level)
     pts = stream.withColumn(
         "cell", cell_encode_udf(F.col("lat"), F.col("lon"), level))
-    cand = (pts.join(F.broadcast(cov), "cell")
-            .filter((F.col("lat") >= F.col("lat_min"))
-                    & (F.col("lat") <= F.col("lat_max"))
-                    & (F.col("lon") >= F.col("lon_min"))
-                    & (F.col("lon") <= F.col("lon_max"))))
-    grp = F.col("__geom") if "__geom" in cov.columns else None
-    hit = cand.filter(pip_udf(F.col("lat"), F.col("lon"), F.col("poly_id"),
-                              F.col("ring"), holes=F.col("holes"),
-                              group=grp))
+    hit = _pip_residual(pts.join(F.broadcast(cov), "cell"))
     # extra point columns (e.g. a measurement value for
     # windowed_poly_stats) ride the per-batch join for free, same as the
     # batch operator's keep_point_cols

@@ -136,17 +136,3 @@ def test_dbscan_border_point_deterministic(spark):
     assert got[6] == (1, False, 3)
     assert got[7] == (None, False, 1)
 
-
-def test_dbscan_hashmin_equals_star(spark):
-    """Both component algorithms yield identical labels (hash-min is the
-    low-diameter fast path for spatially compact eps clusters)."""
-    ids, lat, lon = _fixture()
-    df = spark.createDataFrame(
-        [(int(i), float(la), float(lo)) for i, la, lo in zip(ids, lat, lon)],
-        "id long, lat double, lon double")
-    a = {r.id: (r.cluster, r.is_core)
-         for r in dbscan(df, 30_000.0, 5, level=6).collect()}
-    b = {r.id: (r.cluster, r.is_core)
-         for r in dbscan(df, 30_000.0, 5, level=6,
-                         cc_algorithm="hashmin").collect()}
-    assert a == b

@@ -411,14 +411,10 @@ def test_antimeridian_noncrossing_passthrough(spark):
     assert a == b
 
 
-def test_multipolygon_parts_single_batch_pip(spark):
-    """ADVICE r4 (medium): with ALL candidate rows in ONE partition (and
-    thus one Arrow batch), pip_udf must still test each candidate against
-    its own part's ring — grouping by bare poly_id evaluated both parts
-    of a MultiPolygon against the first part's geometry. A grid of points
-    across both parts makes any cross-part evaluation visible."""
-    from geopy_spark.operators.spatial_join import spatial_join
-
+def _twin_parts(spark):
+    """One two-part MultiPolygon (poly_id 9, parts 20° of longitude
+    apart) plus a point grid inside both parts, near both rims and just
+    outside each: (regions, points rows (point_id, lat, lon, inside))."""
     mp = {"type": "Feature", "id": "9", "properties": {"name": "twin"},
           "geometry": {"type": "MultiPolygon", "coordinates": [
               [[[10.0, 50.0], [12.0, 50.0], [12.0, 52.0], [10.0, 52.0],
@@ -430,7 +426,6 @@ def test_multipolygon_parts_single_batch_pip(spark):
     regions = read_geojson(df).select(
         "poly_id", "name", "ring", "holes",
         "lat_min", "lat_max", "lon_min", "lon_max")
-    # points inside part 0, inside part 1, near both rims, and outside
     rows = []
     pid = 0
     for lon0 in (10.0, 30.0):
@@ -440,14 +435,104 @@ def test_multipolygon_parts_single_batch_pip(spark):
                 rows.append((pid, 50.0 + dlat, lon0 + dlon, True))
             pid += 1
             rows.append((pid, 50.0 + dlat, lon0 + 2.5, False))  # outside
+    return regions, rows
+
+
+def _write_stream_points(rows, path):
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pdf = pd.DataFrame({
+        "point_id": [r[0] for r in rows],
+        "ts": pd.Timestamp("2026-01-01") + pd.to_timedelta(
+            [r[0] for r in rows], unit="s"),
+        "lat": [r[1] for r in rows], "lon": [r[2] for r in rows]})
+    schema = pa.schema([("point_id", pa.int64()),
+                        ("ts", pa.timestamp("us")),
+                        ("lat", pa.float64()), ("lon", pa.float64())])
+    pq.write_table(pa.Table.from_pandas(pdf, schema=schema,
+                                        preserve_index=False), str(path))
+
+
+def test_multipolygon_parts_single_batch_pip(spark, tmp_path):
+    """ADVICE r4 (medium): with ALL candidate rows in ONE partition (and
+    thus one Arrow batch), pip_udf must still test each candidate against
+    its own part's ring — grouping by bare poly_id evaluated both parts
+    of a MultiPolygon against the first part's geometry. A grid of points
+    across both parts makes any cross-part evaluation visible. All three
+    residual callers — the batch operator, the stored-cover join and the
+    stream join — must give the same pairs."""
+    from geopy_spark.operators.spatial_join import spatial_join
+    from geopy_spark.sources import polystore as PS
+    from geopy_spark.sources.bucketed import ensure_database
+    from geopy_spark.streaming import events as S
+    from geopy_spark.streaming import spatial as SS
+
+    regions, rows = _twin_parts(spark)
     pts = spark.createDataFrame(
         [(r[0], r[1], r[2]) for r in rows],
         "point_id long, lat double, lon double").coalesce(1)
+    want = {(r[0], 9) for r in rows if r[3]}
     got = {(r.point_id, r.poly_id)
            for r in spatial_join(pts, regions, point_id="point_id",
                                  level=6, broadcast_regions=True).collect()}
-    want = {(r[0], 9) for r in rows if r[3]}
     assert got == want
+
+    ensure_database(spark, "mpdemo", str(tmp_path / "wh"))
+    try:
+        PS.write_region_cover_bucketed(regions, "mpdemo.cover", level=6,
+                                       n_buckets=4)
+        stored = {(r.point_id, r.poly_id)
+                  for r in PS.spatial_join_against_cover(
+                      pts, spark, "mpdemo.cover", level=6).collect()}
+    finally:
+        spark.sql("DROP DATABASE mpdemo CASCADE")
+    assert stored == want
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_stream_points(rows, src / "p.parquet")
+    out = SS.spatial_join_stream(SS.point_stream_source(spark, str(src)),
+                                 regions, level=6)
+    sink = str(tmp_path / "sink")
+    S.run_available_now(out, str(tmp_path / "ckpt"), sink)
+    streamed = {(r.point_id, r.poly_id)
+                for r in spark.read.parquet(sink).collect()}
+    assert streamed == want
+
+
+def test_cover_without_geom_key_raises(spark, tmp_path):
+    """A pre-exploded cover lacking the __geom geometry key (written
+    before the key existed) is refused by every entry point that takes
+    one — the bucketed and ad-hoc stored-cover joins and the stream join
+    — with a ValueError naming the writer to rerun."""
+    from geopy_spark.operators.spatial_join import _region_cover
+    from geopy_spark.sources import polystore as PS
+    from geopy_spark.sources.bucketed import ensure_database, write_bucketed
+    from geopy_spark.streaming import spatial as SS
+
+    regions, rows = _twin_parts(spark)
+    legacy = _region_cover(regions, 6).drop("__geom")
+    pts = spark.createDataFrame([(r[0], r[1], r[2]) for r in rows],
+                                "point_id long, lat double, lon double")
+    ensure_database(spark, "legacydemo", str(tmp_path / "wh"))
+    try:
+        write_bucketed(legacy, "legacydemo.cover", "cell", n_buckets=4)
+        PS.write_points_bucketed(pts, "legacydemo.pts", level=6,
+                                 n_buckets=4)
+        with pytest.raises(ValueError, match="write_region_cover_bucketed"):
+            PS.spatial_join_bucketed(spark, "legacydemo.pts",
+                                     "legacydemo.cover")
+        with pytest.raises(ValueError, match="write_region_cover_bucketed"):
+            PS.spatial_join_against_cover(pts, spark, "legacydemo.cover",
+                                          level=6)
+    finally:
+        spark.sql("DROP DATABASE legacydemo CASCADE")
+    src = tmp_path / "src"
+    src.mkdir()
+    with pytest.raises(ValueError, match="region_cover"):
+        SS.spatial_join_stream(SS.point_stream_source(spark, str(src)),
+                               legacy, level=6)
 
 
 def test_antimeridian_split_100k_features_fast(spark):

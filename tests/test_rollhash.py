@@ -111,6 +111,16 @@ def test_batch_empty_and_degenerate_inputs():
     assert np.array_equal(lens, np.ones(3, dtype=np.int64))
 
 
+def test_batch_codepoint_limit_raises_at_bound():
+    """The batch's uint64 prefix sums are exact only below 2^33
+    codepoints; the bound check refuses a batch AT the limit and passes
+    one codepoint below it (checked directly — no 32 GiB batch)."""
+    R.check_batch_codepoints(R.MAX_BATCH_CODEPOINTS - 1)
+    with pytest.raises(ValueError, match="codepoints"):
+        R.check_batch_codepoints(R.MAX_BATCH_CODEPOINTS)
+    assert R.MAX_BATCH_CODEPOINTS == 2 ** 33
+
+
 @settings(max_examples=60, deadline=None)
 @given(st.lists(st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=60),

@@ -136,7 +136,7 @@ def test_holes_arrow_transport(spark):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    from geopy_spark.operators.spatial_join import (pip_udf,
+    from geopy_spark.operators.spatial_join import (geom_key, pip_udf,
                                                     polygon_cover_udf)
 
     ring = [[0.0, 0.0], [0.0, 10.0], [10.0, 10.0], [10.0, 0.0]]
@@ -160,8 +160,9 @@ def test_holes_arrow_transport(spark):
 
     hits = computed.select(
         "poly_id",
-        pip_udf(F.lit(5.0), F.lit(5.0), F.col("poly_id"), F.col("ring"),
-                holes=F.col("holes")).alias("hit")).collect()
+        pip_udf(F.lit(5.0), F.lit(5.0),
+                geom_key(F.col("ring"), F.col("holes"), F.col("poly_id")),
+                F.col("ring"), holes=F.col("holes")).alias("hit")).collect()
     assert {r.poly_id: r.hit for r in hits} == {1: False, 2: True}
 
 
