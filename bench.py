@@ -1,6 +1,13 @@
-"""Headline benchmark (driver-run per round; BENCH_r{N}.json).
+"""Headline benchmark (driver-run per round; BENCH_r{N}.json) and the one
+registry of bench shapes.
 
-Runs scale-stressing queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
+``SHAPES`` maps each bench shape to a builder ``(spark, sf_dir) ->
+DataFrame`` that builds its own inputs and returns the un-actioned frame:
+the six ``HEADLINE`` leaves, the six ``SPATIAL_OPS`` side-block shapes and
+``image_neardup``. tools/capture_plans.py and tools/profile_ops.py read the
+same registry, so the plans they capture and profile are the timed ones.
+
+Runs the shapes at $SPARK_GRAFT_SF_DIR (default sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -12,23 +19,33 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from geopy_spark import synth  # noqa: E402
-from geopy_spark.entry_queries import (_REGIONS_SCHEMA, q_pricing_summary)  # noqa: E402
+from geopy_spark.entry_queries import (_REGIONS_SCHEMA, q_image_neardup,  # noqa: E402
+                                       q_pricing_summary)
 from geopy_spark.functions import geo  # noqa: E402
+from geopy_spark.operators.clustering import dbscan  # noqa: E402
 from geopy_spark.operators.dedup import minhash_lsh_pairs  # noqa: E402
-from geopy_spark.operators.knn import knn_join  # noqa: E402
+from geopy_spark.operators.knn import knn_join, within_distance_join  # noqa: E402
+from geopy_spark.operators.measures import region_measures  # noqa: E402
 from geopy_spark.operators.similarity import brute_force_topk  # noqa: E402
-from geopy_spark.operators.spatial_join import spatial_join  # noqa: E402
+from geopy_spark.operators.spatial_join import polygon_join, spatial_join  # noqa: E402
 from geopy_spark.operators.tiling import tile_pyramid, tile_stats  # noqa: E402
+from geopy_spark.operators.trajectory import trajectory_stats  # noqa: E402
+from geopy_spark.operators.zonal import zonal_stats  # noqa: E402
 from geopy_spark.session import get_spark, load_table  # noqa: E402
 
+
+# ------------------------------------------------------------ shared inputs
 
 def lineitem_points(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
@@ -38,56 +55,152 @@ def lineitem_points(spark, sf_dir):
                      geo.derived_lon(key).alias("lon"))
 
 
+def supplier_queries(spark, sf_dir):
+    """One query point per supplier, derived from keys off the lineitem
+    key range."""
+    s = load_table(spark, sf_dir, "supplier")
+    return s.select(F.col("s_suppkey").alias("query_id"),
+                    geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
+                    geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
+
+
+def regions48(spark, seed=7, holed=False):
+    """The 48-polygon region fixture: seed 7 solid or holed, seed 99."""
+    polys = (synth.oracle_polygons_holed(48, seed=seed) if holed
+             else synth.oracle_polygons(48, seed=seed))
+    return spark.createDataFrame(synth.polygons_pdf(polys),
+                                 schema=_REGIONS_SCHEMA)
+
+
+# ------------------------------------------------------------------ shapes
+
 def b_spatial_join(spark, sf_dir):
-    pts = lineitem_points(spark, sf_dir)
-    regions = spark.createDataFrame(
-        synth.polygons_pdf(synth.oracle_polygons(48, seed=7)), schema=_REGIONS_SCHEMA)
     # the 48-polygon fixture is known-small: skip the size-guard's
     # estimation job (VERDICT r3 measured it as the spatial_join bench's
     # 1.54→1.96s like-for-like drift) and broadcast directly
-    return spatial_join(pts, regions, point_id="point_id", level=7,
-                        broadcast_regions=True).count()
+    return spatial_join(lineitem_points(spark, sf_dir), regions48(spark),
+                        point_id="point_id", level=7, broadcast_regions=True)
 
 
 def b_knn(spark, sf_dir):
-    s = load_table(spark, sf_dir, "supplier")
-    qs = s.select(F.col("s_suppkey").alias("query_id"),
-                  geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
-                  geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
     pts = lineitem_points(spark, sf_dir).withColumnRenamed("point_id", "id")
-    return knn_join(qs, pts, k=10, level=8, point_id="id").count()
+    return knn_join(supplier_queries(spark, sf_dir), pts, k=10, level=8,
+                    point_id="id")
 
 
 def b_tile_pyramid(spark, sf_dir):
-    pts = lineitem_points(spark, sf_dir)
-    leaf = tile_stats(pts, z=8)
-    return tile_pyramid(leaf, z_max=8, z_min=0).count()
-
-
-def b_pricing(spark, sf_dir):
-    return q_pricing_summary(spark, sf_dir).count()
+    leaf = tile_stats(lineitem_points(spark, sf_dir), z=8)
+    return tile_pyramid(leaf, z_max=8, z_min=0)
 
 
 def b_minhash(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(d, threshold=0.3).count()
+    return minhash_lsh_pairs(d, threshold=0.3)
 
 
 def b_embedding_topk(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     qv = [r[0] for r in e.filter(F.col("vec_id") == 0)
           .select(F.explode("embedding")).collect()]
-    return brute_force_topk(e, qv, k=10, exclude_id=0).count()
+    return brute_force_topk(e, qv, k=10, exclude_id=0)
 
 
-BENCH = {
+# round 4-5 spatial operators (NOT in the headline total, which stays the
+# round-1 query set for comparability): G17 zonal, G18 within-distance,
+# G16 polygon join, G20 raster-free measures, G23 DBSCAN, G24 trajectory
+# stats — over the same lineitem-derived points / holed fixture
+
+def b_zonal(spark, sf_dir):
+    pts_v = lineitem_points(spark, sf_dir).withColumn(
+        "value", (F.col("point_id") % 97).cast("double"))
+    return zonal_stats(pts_v, regions48(spark, holed=True), value_col="value",
+                       point_id="point_id", level=7, broadcast_regions=True)
+
+
+def b_within_distance(spark, sf_dir):
+    pts = lineitem_points(spark, sf_dir).withColumnRenamed("point_id", "id")
+    return within_distance_join(supplier_queries(spark, sf_dir), pts,
+                                100_000.0, level=6, point_id="id")
+
+
+def b_polygon_join(spark, sf_dir):
+    return polygon_join(regions48(spark, holed=True), regions48(spark, seed=99),
+                        level=6)
+
+
+def b_measures(spark, sf_dir):
+    return region_measures(regions48(spark, holed=True))
+
+
+def b_dbscan(spark, sf_dir):
+    # eps graph + core CC over an ~86k global point sample at sf0.1 — the
+    # density regime where most points are noise, i.e. the shuffle-bound
+    # path. Level 8 (78 km cells): the eps=50 km disk stays a 3x3 cell
+    # block while candidate area shrinks ~16x vs level 6
+    pts = lineitem_points(spark, sf_dir).withColumnRenamed("point_id", "id")
+    return dbscan(pts.filter(F.col("id") % 7 == 0), 50_000.0, 4, level=8,
+                  point_id="id")
+
+
+def b_trajectory(spark, sf_dir):
+    # events as a ping stream, one entity-window shuffle
+    e = load_table(spark, sf_dir, "events")
+    pings = e.select(F.col("user_id").alias("entity_id"), "ts", "event_id",
+                     geo.derived_lat(F.col("event_id")).alias("lat"),
+                     geo.derived_lon(F.col("event_id")).alias("lon"))
+    return trajectory_stats(pings, tiebreak_col="event_id")
+
+
+SHAPES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "spatial_join": b_spatial_join,
     "knn": b_knn,
     "tile_pyramid": b_tile_pyramid,
-    "pricing_summary": b_pricing,
+    "pricing_summary": q_pricing_summary,
     "minhash_neardup": b_minhash,
     "embedding_topk": b_embedding_topk,
+    "zonal_stats": b_zonal,
+    "within_distance": b_within_distance,
+    "polygon_join": b_polygon_join,
+    "measures": b_measures,
+    "dbscan": b_dbscan,
+    "trajectory_stats": b_trajectory,
+    # round-3 image axis: banded phash-Hamming LSH near-dup
+    "image_neardup": q_image_neardup,
 }
+HEADLINE = ("spatial_join", "knn", "tile_pyramid", "pricing_summary",
+            "minhash_neardup", "embedding_topk")
+SPATIAL_OPS = ("zonal_stats", "within_distance", "polygon_join", "measures",
+               "dbscan", "trajectory_stats")
+
+
+def _timed(run: Callable[[], int]):
+    """One cold pass, then three warm passes of ``run``: (rows of the last
+    pass, cold seconds, warm seconds per pass).
+
+    The cold pass warms that shape's python-worker code paths (kernel
+    imports, scratch-buffer page faults, shuffle-file creation, JIT);
+    callers report the MEDIAN of the warm passes (ADVICE r2: min-of-warm
+    was a lucky-run-biased estimator on a shared VM with documented 3x
+    wall-clock variance between identical runs — the median matches the
+    BENCH/BASELINE.md shared-host protocol)."""
+    t0 = time.monotonic()
+    rows = run()
+    cold = round(time.monotonic() - t0, 3)
+    runs = []
+    for _ in range(3):
+        t0 = time.monotonic()
+        rows = run()
+        runs.append(round(time.monotonic() - t0, 3))
+    return rows, cold, runs
+
+
+def _count(spark, sf_dir, name):
+    return lambda: SHAPES[name](spark, sf_dir).count()
+
+
+def _warm_record(rows, runs) -> dict:
+    return {"median_sec": round(statistics.median(runs), 3),
+            "runs": runs, "rows": int(rows)}
 
 
 def skew_experiment(spark, sf_dir) -> dict:
@@ -100,12 +213,9 @@ def skew_experiment(spark, sf_dir) -> dict:
     `plain` disables the hot-cell pre-pass via an unreachable
     hot_min_count (same code path, zero salted keys); AQE stays on in
     both (it is the engine's documented second layer)."""
-    import statistics
-    ppdf = synth.polygons_pdf(synth.oracle_polygons(48, seed=7))
-    regions = spark.createDataFrame(ppdf, schema=_REGIONS_SCHEMA)
-    centers = [(float((r.lat_min + r.lat_max) / 2),
-                float((r.lon_min + r.lon_max) / 2))
-               for r in ppdf.head(3).itertuples(index=False)]
+    regions = regions48(spark)
+    centers = [((r.lat_min + r.lat_max) / 2, (r.lon_min + r.lon_max) / 2)
+               for r in regions.head(3)]
 
     uniform = lineitem_points(spark, sf_dir)
     hot = F.pmod(F.col("point_id"), F.lit(10))
@@ -122,16 +232,9 @@ def skew_experiment(spark, sf_dir) -> dict:
             kw = dict(point_id="point_id", level=7, broadcast_regions=False)
             if mode == "plain":
                 kw["hot_min_count"] = 1 << 60  # pre-pass finds nothing
-            run = lambda: spatial_join(pts, regions, **kw).count()  # noqa: E731
-            n = run()  # warm pass
-            runs = []
-            for _ in range(3):
-                t0 = time.monotonic()
-                run()
-                runs.append(round(time.monotonic() - t0, 3))
-            out[f"{dist}_{mode}"] = {
-                "median_sec": round(statistics.median(runs), 3),
-                "runs": runs, "rows": n}
+            rows, _, runs = _timed(
+                lambda: spatial_join(pts, regions, **kw).count())
+            out[f"{dist}_{mode}"] = _warm_record(rows, runs)
     return out
 
 
@@ -171,117 +274,26 @@ def main() -> None:
     warm.join(F.broadcast(spark.range(10)), "id", "left_semi").count()
     load_table(spark, sf_dir, "lineitem").count()
 
-    # Each query runs four times: the first (cold) pass warms that query's
-    # python-worker code paths (kernel imports, scratch-buffer page faults —
-    # first-touch allocation on this host measures ~25 MB/s — shuffle-file
-    # creation, JIT); the reported time is the MEDIAN of the three warm
-    # passes (ADVICE r2: min-of-warm was a lucky-run-biased estimator on a
-    # shared VM with documented 3x wall-clock variance between identical
-    # runs — the median matches the BENCH/BASELINE.md shared-host
-    # protocol). All passes stay visible in the JSON.
-    import statistics
+    # every shape: a cold pass, then the median of three warm passes (see
+    # `_timed`); all passes stay visible in the JSON
     times: dict[str, float] = {}
     cold: dict[str, float] = {}
     warm_all: dict[str, list[float]] = {}
     counts: dict[str, int] = {}
-    for name, fn in BENCH.items():
-        t0 = time.monotonic()
-        counts[name] = fn(spark, sf_dir)
-        cold[name] = round(time.monotonic() - t0, 3)
-        warm_all[name] = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            counts[name] = fn(spark, sf_dir)
-            warm_all[name].append(round(time.monotonic() - t0, 3))
+    for name in HEADLINE:
+        counts[name], cold[name], warm_all[name] = _timed(
+            _count(spark, sf_dir, name))
         times[name] = round(statistics.median(warm_all[name]), 3)
 
     skew = skew_experiment(spark, sf_dir)
 
-    # round-3 image-axis extra (NOT in the headline total, which stays
-    # the round-1 query set for comparability): banded phash-Hamming LSH
-    # image near-dup at sf0.1, median of 3 warm runs
-    import __spark_entry__ as _entry
-    imq = _entry.queries()["image_neardup"]
-    imq(spark, sf_dir).count()  # cold pass
-    im_runs = []
-    for _ in range(3):
-        t0 = time.monotonic()
-        im_rows = imq(spark, sf_dir).count()
-        im_runs.append(round(time.monotonic() - t0, 3))
-    # round-5: measured walls for the spatial operators added in rounds
-    # 4-5 (NOT in the headline total, which stays the round-1 query set
-    # for comparability): G17 zonal, G18 within-distance, G16 polygon
-    # join, G20 raster-free measures — each median of 3 warm runs over
-    # the same lineitem-derived points / holed fixture
-    from geopy_spark.operators.knn import within_distance_join
-    from geopy_spark.operators.measures import region_measures
-    from geopy_spark.operators.spatial_join import polygon_join
-    from geopy_spark.operators.zonal import zonal_stats
-
-    regions_holed = spark.createDataFrame(
-        synth.polygons_pdf(synth.oracle_polygons_holed(48, seed=7)),
-        schema=_REGIONS_SCHEMA)
-    pts_v = lineitem_points(spark, sf_dir).withColumn(
-        "value", (F.col("point_id") % 97).cast("double"))
-    qs = load_table(spark, sf_dir, "supplier").select(
-        F.col("s_suppkey").alias("query_id"),
-        geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
-        geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
-    pts_id = lineitem_points(spark, sf_dir).withColumnRenamed(
-        "point_id", "id")
-
-    def _zonal():
-        return zonal_stats(pts_v, regions_holed, value_col="value",
-                           point_id="point_id", level=7,
-                           broadcast_regions=True).count()
-
-    def _withind():
-        return within_distance_join(qs, pts_id, 100_000.0, level=6,
-                                    point_id="id").count()
-
-    def _polyjoin():
-        right = spark.createDataFrame(
-            synth.polygons_pdf(synth.oracle_polygons(48, seed=99)),
-            schema=_REGIONS_SCHEMA)
-        return polygon_join(regions_holed, right, level=6).count()
-
-    def _measures():
-        return region_measures(regions_holed).count()
-
-    # round-5 additions: G23 DBSCAN (eps graph + core CC over an ~86k
-    # global point sample — the density regime where most points are
-    # noise, i.e. the shuffle-bound path) and G24 trajectory stats
-    # (events as ping stream, one entity-window shuffle)
-    from geopy_spark.operators.clustering import dbscan
-    from geopy_spark.operators.trajectory import trajectory_stats
-
-    pts_db = pts_id.filter(F.col("id") % 7 == 0)
-
-    def _dbscan():
-        # level 8 (78 km cells): the eps=50 km disk stays a 3x3 cell
-        # block while candidate area shrinks ~16x vs level 6
-        return dbscan(pts_db, 50_000.0, 4, level=8, point_id="id").count()
-
-    def _trajectory():
-        e = load_table(spark, sf_dir, "events")
-        pings = e.select(F.col("user_id").alias("entity_id"), "ts",
-                         "event_id",
-                         geo.derived_lat(F.col("event_id")).alias("lat"),
-                         geo.derived_lon(F.col("event_id")).alias("lon"))
-        return trajectory_stats(pings, tiebreak_col="event_id").count()
-
+    # the image and spatial side blocks are NOT in the headline total,
+    # which stays the round-1 query set for comparability
+    im_rows, _, im_runs = _timed(_count(spark, sf_dir, "image_neardup"))
     spatial_ops = {}
-    for nm, fn in (("zonal_stats", _zonal), ("within_distance", _withind),
-                   ("polygon_join", _polyjoin), ("measures", _measures),
-                   ("dbscan", _dbscan), ("trajectory_stats", _trajectory)):
-        n_rows = fn()  # warm
-        runs = []
-        for _ in range(3):
-            t0 = time.monotonic()
-            fn()
-            runs.append(round(time.monotonic() - t0, 3))
-        spatial_ops[nm] = {"median_sec": round(statistics.median(runs), 3),
-                           "runs": runs, "rows": int(n_rows)}
+    for nm in SPATIAL_OPS:
+        rows, _, runs = _timed(_count(spark, sf_dir, nm))
+        spatial_ops[nm] = _warm_record(rows, runs)
 
     extras = {"image_neardup_sec": round(statistics.median(im_runs), 3),
               "image_neardup_rows": int(im_rows),

@@ -167,7 +167,6 @@ def _rect_counts(keys, pref, iq, jq, ri: int, rj: int, nh: int):
 
 def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
              level: int = DEFAULT_LEVEL, point_id: str = "id",
-             r0: int = 1, max_r: int | None = None,
              points_have_cell: bool = False,
              broadcast_max_cells: int = BROADCAST_MAX_CELLS) -> DataFrame:
     """queries(query_id, lat, lon) × points(id, lat, lon) → exactly the k
@@ -176,8 +175,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     points_have_cell=True skips re-encoding when the point side already
     carries a `cell` column at ``level`` (sorted-cell store path)."""
     n = 2 ** level
-    if max_r is None:
-        max_r = n  # full-grid fallback guarantees termination
     cell_deg = K.cell_size_deg(level)
     m_per_deg = meters_per_deg_lat()
 
@@ -198,17 +195,12 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     # OCCUPIED cells only (≤ n_points rows of two longs, 267k here).
     hist_level = min(level + 3, HIST_MAX_LEVEL)
     nh = 1 << hist_level
-    scale = hist_level - level
-    if scale >= 0:
-        max_r_h = min(nh, max_r << scale)
-    else:
-        max_r_h = max(1, max_r >> (-scale))
     keys, pref = _cell_histogram(pts, hist_level)
     bc = spark.sparkContext.broadcast((keys, pref))
     cell_h = 180.0 / nh
     cell_w = 360.0 / nh
 
-    @F.pandas_udf("r1 long, dk double, full boolean")
+    @F.pandas_udf("dk double, full boolean")
     def _bound(la: pd.Series, lo: pd.Series) -> pd.DataFrame:
         hk, hp = bc.value
         lat, lon = K.normalize_lat_lon(la.to_numpy(np.float64),
@@ -221,23 +213,22 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
         pend = np.arange(p_n)
         # always start at one histogram cell: smaller satisfying rects
         # give tighter dk bounds, and extra doubling rounds are pure
-        # numpy (r0 shaped the old per-round JOIN cost, which no longer
-        # exists)
+        # numpy; the full-grid radius nh guarantees termination
         r = 1
         while pend.size:
             cnt = _rect_counts(hk, hp, iq[pend], jq[pend], r, 2 * r, nh)
-            done = (cnt >= k) | (r >= max_r_h)
+            done = (cnt >= k) | (r >= nh)
             res_r[pend[done]] = r
             res_full[pend[done]] = cnt[done] >= k
             pend = pend[~done]
-            r = min(2 * r, max_r_h)
+            r = min(2 * r, nh)
         # conservative kth-distance bound over the ±r*, ±2r* rectangle:
         # meridian arc to the worst row edge + parallel arc (at the band
         # latitude nearest the equator) to the worst column edge — an
         # upper bound on the great-circle distance to ANY point in the
         # rectangle, hence on the kth-nearest distance when the rectangle
-        # holds ≥ k points. full=False queries (< k points even at
-        # max_r) get the full-window bound; phase 2 then skips the
+        # holds ≥ k points. full=False queries (< k points even over
+        # the full grid) get the full-window bound; phase 2 then skips the
         # distance prune for them, exactly like the old loop's fallback.
         rr = res_r
         lat_lo = np.maximum(-90.0, (iq - rr) * cell_h - 90.0)
@@ -252,7 +243,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
                         np.cos(np.radians(np.minimum(np.abs(lat_lo),
                                                      np.abs(lat_hi)))))
         dk = m_per_deg * dlat + m_per_deg * cosm * dlon
-        return pd.DataFrame({"r1": rr, "dk": dk, "full": res_full})
+        return pd.DataFrame({"dk": dk, "full": res_full})
 
     qry = _with_cell(queries, level).select("query_id", "lat", "lon", "cell")
     w = Window.partitionBy("query_id").orderBy(F.col("dist_m").asc(),
@@ -261,12 +252,9 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
     # ---- Phase 2: exact rectangular window from the d_k bound
     q2 = (qry.withColumn("_b", _bound(F.col("lat"), F.col("lon")))
           .select("query_id", "lat", "lon", "cell",
-                  F.col("_b.r1").alias("r1"), F.col("_b.dk").alias("dk"),
+                  F.col("_b.dk").alias("dk"),
                   F.col("_b.full").alias("full")))
-    # exactness needs only ball(dk) ⊆ window — ri/rj derive from dk
-    # alone (the old greatest(ri, r1) floor tied phase 2 to the phase-1
-    # JOIN radius; r1 is now in histogram units and kept for
-    # introspection only)
+    # exactness needs only ball(dk) ⊆ window — ri/rj derive from dk alone
     ri = (F.ceil(F.col("dk") / F.lit(cell_deg * m_per_deg)) + F.lit(1)).cast("long")
     # worst-case latitude of any candidate still inside the ±ri band
     band_lat = F.least(F.abs(F.col("lat")) + (ri.cast("double") + 1) * F.lit(cell_deg),
@@ -304,8 +292,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, *,
 
 
 def knn_join_indexed(spark, store_path: str, queries: DataFrame, k: int, *,
-                     level: int, coarse_level: int,
-                     point_id: str = "id", r0: int = 1) -> DataFrame:
+                     level: int, point_id: str = "id") -> DataFrame:
     """Exact kNN against a sorted-cell point store (sources/store.py).
 
     Same two-phase algorithm as knn_join, but the point side is the
@@ -321,7 +308,7 @@ def knn_join_indexed(spark, store_path: str, queries: DataFrame, k: int, *,
     # (dynamic filter); at minimum the parquet row-group stats on the
     # sorted cell column skip non-matching groups.
     return knn_join(queries, pts.drop("pcell"), k, level=level,
-                    point_id=point_id, r0=r0, points_have_cell=True)
+                    point_id=point_id, points_have_cell=True)
 
 
 def within_distance_join(queries: DataFrame, points: DataFrame,

@@ -77,8 +77,8 @@ def get_spark(app: str = "geopy_spark", cores: int | None = None,
         .config("spark.driver.memory",
                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(8, cores)}g"))
         # UI off for bench/test runs (port churn + event-log overhead);
-        # SPARK_GRAFT_UI=true turns it on for REST-API stage profiling
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        # tools/profile_ops.py reads job and SQL metrics without it
+        .config("spark.ui.enabled", "false")
         # saveAsTable (bucketed tables) must never drop files into the
         # repo tree; per-user default because a fixed shared /tmp path
         # collides across concurrent users on a multi-tenant host

@@ -96,7 +96,7 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
     # record the parameter fingerprint in table properties and refuse drift
     params = {"level": args.level, "zmax": args.zmax, "n_polys": args.n_polys,
               "decode": args.decode, "input": os.path.abspath(args.input),
-              "georef": getattr(args, "georef", "table"), "layout": 2}
+              "georef": args.georef, "layout": 2}
     prev = table.properties()
     if prev and isinstance(prev.get("params"), dict):
         # tables written before round 5 stored no 'georef' key; its
@@ -115,7 +115,7 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
     # lat/lon, so swap the table columns for the payload's own GeoTIFF
     # georeferencing here, once — a narrow header-parse map (no strip
     # decode). Rows without geographic geo tags are dropped with a count.
-    if getattr(args, "georef", "table") == "tiff":
+    if args.georef == "tiff":
         from geopy_spark.operators.images import geotiff_georef_udf
         images = (images
                   .drop("lat", "lon")
@@ -154,7 +154,7 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
                 dig = F.broadcast(dig)
             chk = (verify_payload_invariants(
                        images, digests=dig,
-                       roundtrip_sample=getattr(args, "verify_sample", 1))
+                       roundtrip_sample=args.verify_sample)
                    .agg(F.sum("n").alias("n"),
                         F.sum("n_roundtrip").alias("n_roundtrip"),
                         F.min("min_psnr").alias("min_psnr"),
@@ -179,8 +179,8 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
             synth.polygons_pdf(synth.oracle_polygons(args.n_polys, seed=7)),
             schema=_REGIONS_SCHEMA)
         pts = images.select(F.col("image_id").alias("point_id"), "lat", "lon")
-        bcast = {"auto": None, "always": True, "never": False}[
-            getattr(args, "broadcast_regions", "auto")]
+        bcast = {"auto": None, "always": True,
+                 "never": False}[args.broadcast_regions]
         pairs = (spatial_join(pts, regions, point_id="point_id",
                               level=args.level, broadcast_regions=bcast)
                  .withColumnRenamed("point_id", "image_id")

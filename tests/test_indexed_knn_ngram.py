@@ -23,7 +23,7 @@ def test_indexed_knn_matches_fullscan(spark, tmp_path):
     qs = spark.createDataFrame(synth.make_knn_queries_pdf(16))
     a = set(map(tuple, knn_join(qs, pts, k=4, level=5).collect()))
     b = set(map(tuple, knn_join_indexed(spark, store, qs, k=4,
-                                        level=5, coarse_level=2).collect()))
+                                        level=5).collect()))
     assert a == b and len(a) == 16 * 4
 
 

@@ -1,12 +1,13 @@
-"""Capture .explain("formatted") for every bench-timed query shape.
+"""Capture .explain("formatted") for bench shapes from the bench.py registry.
 
 Usage: python tools/capture_plans.py <outdir> [name ...]
 
-Writes <outdir>/<name>.txt for each bench query (headline six + the
-spatial extras). Shapes mirror bench.py exactly (frozen contract) so the
-captured plans are the plans the driver times. Queries whose operators
-run driver actions during construction (knn, dbscan) execute those
-actions here; the captured plan is the final returned DataFrame's.
+Writes <outdir>/<name>.txt for each named shape in ``bench.SHAPES``
+(default: the headline six + the spatial side block; ``image_neardup`` by
+name). The builders are bench.py's own, so the captured plans are the
+plans the driver times. Shapes whose operators run driver actions during
+construction (knn, dbscan, embedding_topk) execute those actions here; the
+captured plan is the final returned DataFrame's.
 """
 
 from __future__ import annotations
@@ -18,124 +19,20 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from geopy_spark import synth  # noqa: E402
-from geopy_spark.entry_queries import _REGIONS_SCHEMA, q_pricing_summary  # noqa: E402
-from geopy_spark.functions import geo  # noqa: E402
-from geopy_spark.operators.clustering import dbscan  # noqa: E402
-from geopy_spark.operators.dedup import minhash_lsh_pairs  # noqa: E402
-from geopy_spark.operators.knn import knn_join, within_distance_join  # noqa: E402
-from geopy_spark.operators.measures import region_measures  # noqa: E402
-from geopy_spark.operators.similarity import brute_force_topk  # noqa: E402
-from geopy_spark.operators.spatial_join import polygon_join, spatial_join  # noqa: E402
-from geopy_spark.operators.tiling import tile_pyramid, tile_stats  # noqa: E402
-from geopy_spark.operators.trajectory import trajectory_stats  # noqa: E402
-from geopy_spark.operators.zonal import zonal_stats  # noqa: E402
-from geopy_spark.session import get_spark, load_table  # noqa: E402
-
-
-def lineitem_points(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("bigint")
-    return li.select(key.alias("point_id"),
-                     geo.derived_lat(key).alias("lat"),
-                     geo.derived_lon(key).alias("lon"))
+from bench import HEADLINE, SHAPES, SPATIAL_OPS  # noqa: E402
+from geopy_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     outdir = sys.argv[1]
-    only = set(sys.argv[2:])
+    names = sys.argv[2:] or HEADLINE + SPATIAL_OPS
     os.makedirs(outdir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("plans", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
 
-    regions = spark.createDataFrame(
-        synth.polygons_pdf(synth.oracle_polygons(48, seed=7)),
-        schema=_REGIONS_SCHEMA)
-    regions_holed = spark.createDataFrame(
-        synth.polygons_pdf(synth.oracle_polygons_holed(48, seed=7)),
-        schema=_REGIONS_SCHEMA)
-    pts = lineitem_points(spark, sf_dir)
-    pts_id = pts.withColumnRenamed("point_id", "id")
-    pts_v = pts.withColumn("value", (F.col("point_id") % 97).cast("double"))
-    s = load_table(spark, sf_dir, "supplier")
-    qs = s.select(F.col("s_suppkey").alias("query_id"),
-                  geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
-                  geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
-
-    def mk_spatial_join():
-        return spatial_join(pts, regions, point_id="point_id", level=7,
-                            broadcast_regions=True)
-
-    def mk_knn():
-        return knn_join(qs, pts_id, k=10, level=8, point_id="id")
-
-    def mk_tile_pyramid():
-        return tile_pyramid(tile_stats(pts, z=8), z_max=8, z_min=0)
-
-    def mk_pricing():
-        return q_pricing_summary(spark, sf_dir)
-
-    def mk_minhash():
-        return minhash_lsh_pairs(load_table(spark, sf_dir, "documents"),
-                                 threshold=0.3)
-
-    def mk_embedding_topk():
-        e = load_table(spark, sf_dir, "embeddings")
-        qv = [r[0] for r in e.filter(F.col("vec_id") == 0)
-              .select(F.explode("embedding")).collect()]
-        return brute_force_topk(e, qv, k=10, exclude_id=0)
-
-    def mk_zonal():
-        return zonal_stats(pts_v, regions_holed, value_col="value",
-                           point_id="point_id", level=7,
-                           broadcast_regions=True)
-
-    def mk_withind():
-        return within_distance_join(qs, pts_id, 100_000.0, level=6,
-                                    point_id="id")
-
-    def mk_polyjoin():
-        right = spark.createDataFrame(
-            synth.polygons_pdf(synth.oracle_polygons(48, seed=99)),
-            schema=_REGIONS_SCHEMA)
-        return polygon_join(regions_holed, right, level=6)
-
-    def mk_measures():
-        return region_measures(regions_holed)
-
-    def mk_dbscan():
-        return dbscan(pts_id.filter(F.col("id") % 7 == 0), 50_000.0, 4,
-                      level=8, point_id="id")
-
-    def mk_trajectory():
-        e = load_table(spark, sf_dir, "events")
-        pings = e.select(F.col("user_id").alias("entity_id"), "ts",
-                         "event_id",
-                         geo.derived_lat(F.col("event_id")).alias("lat"),
-                         geo.derived_lon(F.col("event_id")).alias("lon"))
-        return trajectory_stats(pings, tiebreak_col="event_id")
-
-    makers = {
-        "spatial_join": mk_spatial_join,
-        "knn": mk_knn,
-        "tile_pyramid": mk_tile_pyramid,
-        "pricing_summary": mk_pricing,
-        "minhash_neardup": mk_minhash,
-        "embedding_topk": mk_embedding_topk,
-        "zonal_stats": mk_zonal,
-        "within_distance": mk_withind,
-        "polygon_join": mk_polyjoin,
-        "measures": mk_measures,
-        "dbscan": mk_dbscan,
-        "trajectory_stats": mk_trajectory,
-    }
-    for name, mk in makers.items():
-        if only and name not in only:
-            continue
-        df = mk()
+    for name in names:
+        df = SHAPES[name](spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")

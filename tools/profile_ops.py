@@ -1,137 +1,121 @@
-"""Per-job phase profile for the expensive bench operators (guide §1).
+"""Layer-by-layer profile of the bench shapes in the bench.py registry.
 
-Runs one warm pass then one profiled pass of a bench shape with the
-Spark UI enabled, and attributes wall-clock to Spark jobs via the UI
-REST API (job callsites name the driver action that launched them).
+Usage: python tools/profile_ops.py [name ...]   (default: every shape)
 
-Usage: SPARK_GRAFT_UI=true python tools/profile_ops.py dbscan|knn|...
+Each named shape in ``bench.SHAPES`` runs one cold pass, then 5 warm
+passes. Every pass is traced as two spans with ``perfbench.measure.Tracer``
+— ``<name>.call`` (the builder, including any driver actions it runs) and
+``<name>.action`` (the ``count()``) — so the numbers come from per-span
+job groups, the SQL status store and the app status store, all live with
+the Spark UI off. Per shape it prints:
+
+- median / min / runs / rows of the warm passes' walls;
+- per warm pass, each span's wall and job count and the plan counters
+  (shuffle and broadcast bytes, rows/bytes/time into Python nodes, PIP
+  residual rows, join output rows) and the tracer's own bookkeeping time,
+  which the pass walls leave out;
+- per warm pass, the job wall summed by job callsite (the driver action
+  that launched the job).
+
+The last stdout line is one JSON object holding all of it, keyed by shape.
+Input: $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS].
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-os.environ.setdefault("SPARK_GRAFT_UI", "true")
+from bench import SHAPES  # noqa: E402
+from geopy_spark.session import get_spark  # noqa: E402
+from perfbench.measure import Tracer, op_records  # noqa: E402
 
-from pyspark.sql import functions as F  # noqa: E402
-
-from geopy_spark import synth  # noqa: E402
-from geopy_spark.entry_queries import _REGIONS_SCHEMA  # noqa: E402
-from geopy_spark.functions import geo  # noqa: E402
-from geopy_spark.session import get_spark, load_table  # noqa: E402
-
-
-def _api(path: str):
-    base = "http://localhost:4040/api/v1"
-    with urllib.request.urlopen(base + path) as r:
-        return json.load(r)
+REPS = 5
+LAYERS = ("call_s", "call_jobs", "action_s", "action_jobs", "shuffle_bytes",
+          "broadcast_bytes", "py_rows", "py_bytes", "py_s", "pip_rows",
+          "join_rows", "trace_overhead_s")
 
 
-def _ts(s: str) -> float:
-    from datetime import datetime
-    return datetime.strptime(s, "%Y-%m-%dT%H:%M:%S.%f%Z").timestamp()
+def callsites(spark, spans) -> dict[str, dict[str, float]]:
+    """Jobs of ``spans`` grouped by callsite: count and summed job wall,
+    read from the app status store (kept with the UI off)."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    out: dict[str, dict[str, float]] = {}
+    for sp in spans:
+        for group in sp.groups:
+            for jid in tracker.getJobIdsForGroup(group):
+                job = store.job(jid)
+                wall = (job.completionTime().get().getTime()
+                        - job.submissionTime().get().getTime()) / 1e3
+                rec = out.setdefault(job.name().split("\n")[0],
+                                     {"jobs": 0, "wall_s": 0.0})
+                rec["jobs"] += 1
+                rec["wall_s"] += wall
+    return out
 
 
-def report(app_id: str, first_job: int) -> None:
-    jobs = [j for j in _api(f"/applications/{app_id}/jobs")
-            if j["jobId"] >= first_job]
-    jobs.sort(key=lambda j: j["jobId"])
-    total = 0.0
-    by_site: dict[str, tuple[float, int]] = {}
-    for j in jobs:
-        dur = _ts(j["completionTime"]) - _ts(j["submissionTime"])
-        total += dur
-        name = j["name"].split("\n")[0]
-        t, c = by_site.get(name, (0.0, 0))
-        by_site[name] = (t + dur, c + 1)
-    print(f"-- {len(jobs)} jobs, sum(job wall) = {total:.2f}s")
-    for name, (t, c) in sorted(by_site.items(), key=lambda kv: -kv[1][0]):
-        print(f"  {t:7.2f}s  x{c:<4d} {name}")
-    if os.environ.get("SPARK_GRAFT_PROFILE_DETAIL"):
-        prev_end = None
-        for j in jobs:
-            sub = _ts(j["submissionTime"])
-            end = _ts(j["completionTime"])
-            gap = (sub - prev_end) if prev_end is not None else 0.0
-            prev_end = end
-            stages = ",".join(str(s) for s in j["stageIds"][:6])
-            print(f"    job {j['jobId']:>4} dur={end-sub:6.2f}s gap_before="
-                  f"{gap:6.2f}s stages=[{stages}] "
-                  f"{(j.get('description') or j['name']).splitlines()[0][:90]}")
+def profile(tr: Tracer, spark, sf_dir: str, name: str) -> dict:
+    def run():
+        with tr.span(f"{name}.call"):
+            df = SHAPES[name](spark, sf_dir)
+        with tr.span(f"{name}.action"):
+            return df.count()
+
+    run()  # cold pass: JIT, python workers, page faults
+    tr.spans.clear()
+    overhead0 = tr.overhead_s
+    for _ in range(REPS):
+        rows = run()
+    # a pass's wall is its two spans, without the tracer's bookkeeping
+    runs = [round(c.seconds + a.seconds, 3)
+            for c, a in zip(tr.spans[::2], tr.spans[1::2])]
+    rec = op_records(tr.spans)[name]
+    rec["trace_overhead_s"] = tr.overhead_s - overhead0
+    sites = callsites(spark, tr.spans)
+    return {
+        "median": round(statistics.median(runs), 3), "min": min(runs),
+        "runs": runs, "rows": int(rows),
+        "per_pass": {k: round(rec.get(k, 0.0) / REPS, 3) for k in LAYERS},
+        "callsites": {s: {"jobs": round(v["jobs"] / REPS, 2),
+                          "wall_s": round(v["wall_s"] / REPS, 3)}
+                      for s, v in sorted(sites.items(),
+                                         key=lambda kv: -kv[1]["wall_s"])},
+    }
+
+
+def show(name: str, r: dict) -> None:
+    p = r["per_pass"]
+    print(f"== {name}: median={r['median']:.3f}s min={r['min']:.3f}s "
+          f"runs={r['runs']} rows={r['rows']}")
+    print(f"  call   {p['call_s']:7.3f}s jobs={p['call_jobs']:g}")
+    print(f"  action {p['action_s']:7.3f}s jobs={p['action_jobs']:g}")
+    print("  " + " ".join(f"{k}={p[k]:g}" for k in LAYERS[4:]))
+    sites = r["callsites"]
+    print(f"  -- per pass: {sum(v['jobs'] for v in sites.values()):g} jobs, "
+          f"sum(job wall) = {sum(v['wall_s'] for v in sites.values()):.3f}s")
+    for site, v in sites.items():
+        print(f"  {v['wall_s']:7.3f}s  x{v['jobs']:<5g} {site}")
 
 
 def main() -> None:
-    which = sys.argv[1]
+    names = sys.argv[1:] or list(SHAPES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("profile", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    app_id = sc.applicationId
-
-    li = load_table(spark, sf_dir, "lineitem")
-    key = (F.col("l_orderkey") * 8 + F.col("l_linenumber")).cast("bigint")
-    pts = li.select(key.alias("point_id"),
-                    geo.derived_lat(key).alias("lat"),
-                    geo.derived_lon(key).alias("lon"))
-    pts_id = pts.withColumnRenamed("point_id", "id")
-
-    if which == "dbscan":
-        from geopy_spark.operators.clustering import dbscan
-        pts_db = pts_id.filter(F.col("id") % 7 == 0)
-
-        def run():
-            return dbscan(pts_db, 50_000.0, 4, level=8, point_id="id").count()
-    elif which == "knn":
-        from geopy_spark.operators.knn import knn_join
-        s = load_table(spark, sf_dir, "supplier")
-        qs = s.select(F.col("s_suppkey").alias("query_id"),
-                      geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
-                      geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
-
-        def run():
-            return knn_join(qs, pts_id, k=10, level=8, point_id="id").count()
-    elif which == "minhash":
-        from geopy_spark.operators.dedup import minhash_lsh_pairs
-        d = load_table(spark, sf_dir, "documents")
-
-        def run():
-            return minhash_lsh_pairs(d, threshold=0.3).count()
-    elif which == "spatial_join":
-        from geopy_spark.operators.spatial_join import spatial_join
-        regions = spark.createDataFrame(
-            synth.polygons_pdf(synth.oracle_polygons(48, seed=7)),
-            schema=_REGIONS_SCHEMA)
-
-        def run():
-            return spatial_join(pts, regions, point_id="point_id", level=7,
-                                broadcast_regions=True).count()
-    elif which == "within_distance":
-        from geopy_spark.operators.knn import within_distance_join
-        s = load_table(spark, sf_dir, "supplier")
-        qs = s.select(F.col("s_suppkey").alias("query_id"),
-                      geo.derived_lat(F.col("s_suppkey") + 500000).alias("lat"),
-                      geo.derived_lon(F.col("s_suppkey") + 500000).alias("lon"))
-
-        def run():
-            return within_distance_join(qs, pts_id, 100_000.0, level=6,
-                                        point_id="id").count()
-    else:
-        raise SystemExit(f"unknown op {which!r}")
-
-    run()  # warm (cold pass: JIT, python workers, page faults)
-    first_job = max((j["jobId"] for j in _api(f"/applications/{app_id}/jobs")),
-                    default=-1) + 1
-    t0 = time.monotonic()
-    n = run()
-    wall = time.monotonic() - t0
-    print(f"== {which}: rows={n} wall={wall:.2f}s")
-    report(app_id, first_job)
+    # one tracer for the whole run: its job-group names are numbered per
+    # tracer, so a second one would see the first one's jobs
+    tr = Tracer(spark)
+    out = {}
+    for name in names:
+        out[name] = profile(tr, spark, sf_dir, name)
+        show(name, out[name])
+    print(json.dumps(out), flush=True)
     spark.stop()
 
 
