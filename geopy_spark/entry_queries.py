@@ -174,21 +174,6 @@ WHERE rk <= 3
 """
 
 
-def q_rollup_orders(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    return (o.withColumn("yr", F.year("o_orderdate").cast("long"))
-            .rollup("yr", "o_orderpriority")
-            .agg(F.count("*").alias("n"),
-                 F.round(F.sum("o_totalprice"), 2).alias("total")))
-
-
-_SQL_ROLLUP = """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderpriority,
-       count(*) AS n, round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total
-FROM orders GROUP BY ROLLUP (yr, o_orderpriority)
-"""
-
-
 def q_distinct_counts(spark, sf_dir):
     """R12 both paths in one witness (merged with the former
     ``approx_distinct`` query in round 3 to free a registry slot under
@@ -258,23 +243,6 @@ _SQL_EVENTS_DAILY = """
 SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, count(*) AS n,
        round(CAST(sum(value) AS DOUBLE), 3) AS sum_value
 FROM events GROUP BY 1, 2
-"""
-
-
-def q_events_json(spark, sf_dir):
-    e = load_table(spark, sf_dir, "events")
-    k = F.regexp_extract("props", r'"k":\s*(-?\d+)', 1).cast("long")
-    return (e.withColumn("k", k)
-            .groupBy("event_type")
-            .agg(F.round(F.avg("k"), 4).alias("avg_k"),
-                 F.max("k").alias("max_k")))
-
-
-_SQL_EVENTS_JSON = """
-SELECT event_type,
-       round(avg(CAST(regexp_extract(props, '"k":\\s*(-?\\d+)', 1) AS BIGINT)), 4) AS avg_k,
-       max(CAST(regexp_extract(props, '"k":\\s*(-?\\d+)', 1) AS BIGINT)) AS max_k
-FROM events GROUP BY event_type
 """
 
 
@@ -388,19 +356,6 @@ SELECT event_id, user_id, last_click_us FROM (
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_click_us
   FROM events)
 WHERE event_type = 'purchase'
-"""
-
-
-def q_cube_orders(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    return (o.withColumn("yr", F.year("o_orderdate").cast("long"))
-            .cube("yr", "o_orderstatus")
-            .agg(F.count("*").alias("n")))
-
-
-_SQL_CUBE = """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderstatus, count(*) AS n
-FROM orders GROUP BY CUBE (yr, o_orderstatus)
 """
 
 
@@ -552,15 +507,6 @@ def q_grouping_sets(spark, sf_dir):
     """)
 
 
-_SQL_GROUPING_SETS = """
-SELECT CAST(year(o_orderdate) AS BIGINT) AS yr, o_orderpriority,
-       count(*) AS n,
-       round(CAST(sum(o_totalprice) AS DOUBLE), 2) AS total
-FROM orders
-GROUP BY GROUPING SETS ((year(o_orderdate)), (o_orderpriority), ())
-"""
-
-
 def q_scalar_medley(spark, sf_dir):
     """R19/R21: string + math scalar functions in one projection."""
     p = load_table(spark, sf_dir, "part")
@@ -606,30 +552,6 @@ SELECT CAST(floor(epoch_us(ts) / 300000000) AS BIGINT) * 300 - off AS bucket,
        round(CAST(sum(value) AS DOUBLE), 3) AS sum_value
 FROM events CROSS JOIN (VALUES (0), (300)) t(off)
 GROUP BY 1, 2
-"""
-
-
-def q_events_json_v2(spark, sf_dir):
-    """R23 via the real JSON surface: from_json with an explicit schema
-    (the round-1 events_json used regexp_extract, which breaks on any
-    nested/escaped JSON)."""
-    e = load_table(spark, sf_dir, "events")
-    parsed = e.withColumn("j", F.from_json("props", "k BIGINT"))
-    return (parsed
-            .withColumn("k2", F.get_json_object("props", "$.k").cast("long"))
-            .groupBy("event_type")
-            .agg(F.round(F.avg(F.col("j.k")), 4).alias("avg_k"),
-                 F.max("j.k").alias("max_k"),
-                 F.sum(F.when(F.col("j.k") == F.col("k2"), 1)
-                       .otherwise(0)).alias("n_consistent")))
-
-
-_SQL_EVENTS_JSON_V2 = """
-SELECT event_type,
-       round(avg(CAST(props->>'k' AS BIGINT)), 4) AS avg_k,
-       max(CAST(props->>'k' AS BIGINT)) AS max_k,
-       count(*) AS n_consistent
-FROM events GROUP BY event_type
 """
 
 

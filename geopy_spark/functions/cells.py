@@ -1,4 +1,4 @@
-"""Spark surface of the qcell index (SURVEY.md §2.2 G1-G3).
+"""Spark surface of the qcell index (SURVEY.md §2.2 G1-G2).
 
 * ``cell_encode_udf`` — pure Column bit math since round 6 (floor
   arithmetic + Morton interleave via mask/shift ladders), zero Python:
@@ -9,19 +9,12 @@
 * ``cell_parent_col`` / ``cell_level_col`` — pure Column bit math
   (shiftright/masks), zero Python: hierarchy navigation stays inside
   whole-stage codegen (G2).
-* ``cell_ring_udf`` — k-ring neighbors as ArrayType(Long) for explode-based
-  kNN expansion (G3).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
-
-from ..kernels import cells as K
 
 # Morton spread masks (kernels.cells._spread) — all fit in signed int64
 _M1 = 0x5555555555555555
@@ -105,22 +98,3 @@ def cell_parent_expr(cell_name: str, parent_level: int) -> Column:
         f"shiftleft(shiftright(shiftright({cell_name}, 5), "
         f"2 * (CAST(({cell_name} & 31) AS INT) - {parent_level})), 5) | {parent_level}"
     )
-
-
-def cell_ring_udf(cell: Column, r: int) -> Column:
-    @F.pandas_udf(ArrayType(LongType()))
-    def _ring(c: pd.Series) -> pd.Series:
-        rings = K.cell_ring(c.to_numpy(np.int64), r)
-        return pd.Series([a.tolist() for a in rings])
-    return _ring(cell)
-
-
-def cell_disk_udf(cell: Column, r: int) -> Column:
-    """All cells with Chebyshev distance ≤ r (union of rings 0..r)."""
-    @F.pandas_udf(ArrayType(LongType()))
-    def _disk(c: pd.Series) -> pd.Series:
-        arr = c.to_numpy(np.int64)
-        parts = [K.cell_ring(arr, k) for k in range(r + 1)]
-        return pd.Series([np.concatenate([parts[k][n] for k in range(r + 1)]).tolist()
-                          for n in range(len(arr))])
-    return _disk(cell)

@@ -129,13 +129,6 @@ def tile_y(lat: Column, z: int) -> Column:
     return F.least(F.greatest(y, F.lit(0)), F.lit(2 ** z - 1))
 
 
-def tile_key(z: int, x: Column, y: Column) -> Column:
-    """Pack (z,x,y) into one int64: [z:5][x:29][y:29] — partition/sort key
-    of the tile pyramid."""
-    return (F.lit(z).cast("long") * F.lit(2 ** 58)
-            + x * F.lit(2 ** 29) + y)
-
-
 def tile_x_sql(lon_expr: str, z: int) -> str:
     # mirror tile_x's normalize_lon wrap so the twins stay semantically
     # identical even for out-of-range longitudes (ADVICE r1)

@@ -189,18 +189,6 @@ def cell_disk_rect(cell: np.ndarray, ri: np.ndarray, rj: np.ndarray) -> list[np.
     return out
 
 
-def cell_annulus_rect(cell: np.ndarray, ri_out: np.ndarray, rj_out: np.ndarray,
-                      ri_in: np.ndarray, rj_in: np.ndarray) -> list[np.ndarray]:
-    """Rectangular annulus: rect(ri_out, rj_out) minus rect(ri_in, rj_in)
-    — the incremental phase-1 kNN expansion (each doubling round joins
-    only the NEW cells, never re-joining the inner disk it already saw).
-    Set difference in cell-id space so longitude wrap/clamp edge cases are
-    handled exactly once, in cell_disk_rect."""
-    outer = cell_disk_rect(cell, ri_out, rj_out)
-    inner = cell_disk_rect(cell, ri_in, rj_in)
-    return [np.setdiff1d(o, h) for o, h in zip(outer, inner)]
-
-
 def cell_size_deg(level: int) -> float:
     """Latitude extent of one cell in degrees at ``level``."""
     return 180.0 / float(2**level)

@@ -262,10 +262,6 @@ def phash64(img: np.ndarray) -> int:
     return int(h.astype(np.int64))
 
 
-def phash_batch(imgs: list[np.ndarray]) -> np.ndarray:
-    return np.array([phash64(im) for im in imgs], dtype=np.int64)
-
-
 def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     x = (np.asarray(a).astype(np.int64) ^ np.asarray(b).astype(np.int64)).astype(np.uint64)
     cnt = np.zeros(x.shape, dtype=np.int64)

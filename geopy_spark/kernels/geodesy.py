@@ -122,7 +122,3 @@ def vincenty_m(lat1, lon1, lat2, lon2, max_iter: int = 100,
 
 def meters_per_deg_lat() -> float:
     return EARTH_RADIUS_M * np.pi / 180.0
-
-
-def meters_per_deg_lon(lat_deg: float) -> float:
-    return EARTH_RADIUS_M * np.pi / 180.0 * float(np.cos(np.radians(lat_deg)))

@@ -42,7 +42,6 @@ from .knn import DEFAULT_LEVEL, within_distance_join
 
 def dbscan(points: DataFrame, eps_m: float, min_pts: int, *,
            level: int = DEFAULT_LEVEL, point_id: str = "id",
-           cc_algorithm: str = "auto",
            checkpoint_dir: str | None = None) -> DataFrame:
     """points(<point_id>, lat, lon) → (<point_id>, cluster, is_core,
     n_neighbors); ``cluster`` is null for noise, else the min core id of
@@ -52,9 +51,9 @@ def dbscan(points: DataFrame, eps_m: float, min_pts: int, *,
     the core-adjacent edge set below and the component loop (reliable
     checkpoints for executor-loss-safe iteration on a real cluster;
     local checkpoints only as the explicit local-mode default).
-    ``cc_algorithm``: "auto" (default — driver union-find under the
-    graph.DRIVER_CC_MAX_EDGES size guard, distributed star loop above
-    it) or "star".
+    Components come from graph.connected_components: driver union-find
+    under its DRIVER_CC_MAX_EDGES size guard, distributed star loop
+    above it.
 
     Pair-stream discipline (optimization round, VERDICT r5 #1): the eps
     pair multiset — Σ|N_eps(p)| rows, potentially orders of magnitude
@@ -109,7 +108,6 @@ def dbscan(points: DataFrame, eps_m: float, min_pts: int, *,
     core_edges = flagged.filter(F.col("_bc") & (F.col("a") != F.col("b"))) \
         .select("a", "b")
     comp = connected_components(core_edges, "a", "b",
-                                algorithm=cc_algorithm,
                                 checkpoint_dir=checkpoint_dir) \
         .select(F.col("node").alias("_pid"), F.col("component").alias("cluster"))
     comp = cores.join(comp, "_pid", "left") \

@@ -20,7 +20,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.text import fingerprint
 from ..kernels.rollhash import shingle_hashes, shingle_hashes_batch
@@ -151,21 +151,6 @@ def minhash_sig_udf(text: Column, num_perm: int = 64, ngram: int = 3) -> Column:
             mins[:, p] = np.minimum.reduceat(tmp, starts).astype(np.int64)
         return pd.Series(mins.tolist())
     return _sig(text)
-
-
-def jaccard_udf(text_a: Column, text_b: Column, ngram: int = 3) -> Column:
-    """Exact shingle-set Jaccard for verify-stage candidate pairs."""
-    @F.pandas_udf(DoubleType())
-    def _j(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        ha = _token_hashes(ta, ngram)
-        hb = _token_hashes(tb, ngram)
-        out = np.empty(len(ta))
-        for n in range(len(ta)):
-            inter = np.intersect1d(ha[n], hb[n], assume_unique=True).size
-            union = ha[n].size + hb[n].size - inter
-            out[n] = inter / union if union else 1.0
-        return pd.Series(out)
-    return _j(text_a, text_b)
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id",

@@ -12,9 +12,10 @@ One distributed algorithm, plus a driver-side solver for small graphs:
   toward per-component stars rooted at the component minimum in
   O(log n) rounds — so a 10^6-node path graph converges in ~20 rounds
   where plain label propagation needs 10^6.
-* ``auto`` (default): graphs at or below a size guard are collected and
-  labelled by a numpy union-find on the driver; larger graphs run the
-  star loop.
+* driver: graphs at or below the ``DRIVER_CC_MAX_EDGES`` size guard
+  are collected and labelled by a numpy union-find on the driver;
+  larger graphs run the star loop. The guard is the only path selector
+  (tests force the star loop by patching it).
 
 Fault tolerance at scale: per-round lineage MUST be truncated (with
 persist() alone each round's analyzed plan nests the previous round's —
@@ -33,7 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# "auto" size guard: edge multisets at or below this row count are
+# driver size guard: edge multisets at or below this row count are
 # collected to the driver (16 bytes/row via Arrow — ≤ ~64 MB at the
 # default) and solved with a vectorized numpy union-find; larger graphs
 # run the distributed star loop. Same engineering posture as the
@@ -55,31 +56,22 @@ def _checkpointer(df_like: DataFrame, checkpoint_dir: str | None):
 
 def connected_components(pairs: DataFrame, a: str = "a", b: str = "b",
                          max_iter: int = 30, *,
-                         algorithm: str = "auto",
-                         checkpoint_dir: str | None = None,
-                         driver_max_edges: int | None = None) -> DataFrame:
+                         checkpoint_dir: str | None = None) -> DataFrame:
     """pairs(a,b) → (node, component) with component = min node id of the
     node's connected component.
 
-    algorithm="auto" (default) counts the edge multiset once and solves
-    graphs of ≤ ``driver_max_edges`` rows with a driver-side vectorized
-    union-find (identical labels, none of the per-round distributed
-    fixed costs), falling back to "star" above the guard.
-    algorithm="star" converges in O(log n) rounds on ANY graph shape and
-    raises visibly at ``max_iter`` (a guard, not a silent truncation).
-    checkpoint_dir=None uses executor-local checkpoints (single-node /
-    local mode); give a durable path for executor-loss-safe iteration on
-    a real cluster.
+    Counts the edge multiset once: graphs of ≤ ``DRIVER_CC_MAX_EDGES``
+    rows are solved by a driver-side vectorized union-find (identical
+    labels, none of the per-round distributed fixed costs); larger ones
+    run the star loop, which converges in O(log n) rounds on ANY graph
+    shape and raises visibly at ``max_iter`` (a guard, not a silent
+    truncation). checkpoint_dir=None uses executor-local checkpoints
+    (single-node / local mode); give a durable path for
+    executor-loss-safe iteration on a real cluster.
     """
-    if algorithm == "auto":
-        cap = DRIVER_CC_MAX_EDGES if driver_max_edges is None \
-            else driver_max_edges
-        if pairs.count() <= cap:
-            return _cc_driver(pairs, a, b)
-        return _cc_star(pairs, a, b, max_iter, checkpoint_dir)
-    if algorithm == "star":
-        return _cc_star(pairs, a, b, max_iter, checkpoint_dir)
-    raise ValueError(f"unknown algorithm {algorithm!r}")
+    if pairs.count() <= DRIVER_CC_MAX_EDGES:
+        return _cc_driver(pairs, a, b)
+    return _cc_star(pairs, a, b, max_iter, checkpoint_dir)
 
 
 def _cc_driver(pairs: DataFrame, a: str, b: str) -> DataFrame:

@@ -235,10 +235,3 @@ def verify_payload_invariants(df: DataFrame, lossy_fmt: str = "qjpg",
                   psnr_bad, phash_bad, cap_bad, ll_bad)],
                 columns=[f.name for f in VERIFY_SCHEMA.fields])
     return df.select(*cols).mapInPandas(_f, VERIFY_SCHEMA)
-
-
-def hamming_udf(a: Column, b: Column) -> Column:
-    @F.pandas_udf(LongType())
-    def _h(x: pd.Series, y: pd.Series) -> pd.Series:
-        return pd.Series(C.hamming64(x.to_numpy(np.int64), y.to_numpy(np.int64)))
-    return _h(a, b)

@@ -80,8 +80,7 @@ def _rect_layer(bounds: DataFrame) -> DataFrame:
 
 
 def raster_zonal_stats(images: DataFrame, regions: DataFrame, *,
-                       level: int = DEFAULT_LEVEL,
-                       broadcast_right: bool | None = None) -> DataFrame:
+                       level: int = DEFAULT_LEVEL) -> DataFrame:
     """(image_id, poly_id, n_px, sum_val, mean_val, min_val, max_val):
     per-(raster, zone) stats of the channel-mean pixel value over pixels
     whose CENTER lies inside the zone (outer-minus-holes,
@@ -106,8 +105,7 @@ def raster_zonal_stats(images: DataFrame, regions: DataFrame, *,
             "holes", F.array().cast("array<array<array<double>>>"))
 
     pairs = polygon_join(rects, regions, level=level,
-                         predicate="intersects",
-                         broadcast_right=broadcast_right)
+                         predicate="intersects")
     id_map = bounds.select("image_id",
                            F.xxhash64("image_id").alias("l_id"))
     pairs = pairs.join(F.broadcast(id_map), "l_id").select(

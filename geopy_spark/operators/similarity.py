@@ -57,32 +57,22 @@ def brute_force_topk(emb: DataFrame, query_vec: list[float], k: int, *,
 
 
 def hyperplane_sigs_udf(vec: Column, n_planes: int, seed: int,
-                        dim: int = 64, group: int | None = None) -> Column:
-    """Random-hyperplane LSH signatures — sign pattern of vec·H.
-
-    group=None → a single int64 bucket over all planes (classic).
-    group=r    → array<long> of n_planes/r per-band bucket ids (banded LSH;
-    posexplode to (band, bucket)). One vectorized matmul per Arrow batch."""
+                        dim: int = 64, *, group: int) -> Column:
+    """Banded random-hyperplane LSH signatures — sign pattern of vec·H,
+    as array<long> of n_planes/group per-band bucket ids (posexplode to
+    (band, bucket)). One vectorized matmul per Arrow batch."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((dim, n_planes))
-    n_bands = 1 if group is None else n_planes // group
-    width = n_planes if group is None else group
+    n_bands = n_planes // group
 
-    @F.pandas_udf(LongType() if group is None else ArrayType(LongType()))
+    @F.pandas_udf(ArrayType(LongType()))
     def _sig(v: pd.Series) -> pd.Series:
         m = np.asarray([np.asarray(x, dtype=np.float64) for x in v])
         signs = (m @ planes) > 0
-        weights = (1 << np.arange(width, dtype=np.int64))
-        per_band = signs.reshape(len(v), n_bands, width) @ weights
-        if group is None:
-            return pd.Series(per_band[:, 0].astype(np.int64))
+        weights = (1 << np.arange(group, dtype=np.int64))
+        per_band = signs.reshape(len(v), n_bands, group) @ weights
         return pd.Series(per_band.astype(np.int64).tolist())
     return _sig(vec)
-
-
-def hyperplane_sig_udf(vec: Column, n_planes: int, seed: int, dim: int = 64) -> Column:
-    """Single-bucket signature (kept for the classic single-probe path)."""
-    return hyperplane_sigs_udf(vec, n_planes, seed, dim, group=None)
 
 
 def ivf_centroids(n_centroids: int, dim: int, seed: int) -> list[list[float]]:

@@ -33,10 +33,18 @@ from ..kernels import pip as P
 
 DEFAULT_LEVEL = 6
 
-# auto-broadcast cap on ESTIMATED exploded-cover rows (mirrors
-# knn.BROADCAST_MAX_CELLS): past this the cover no longer fits a sane
-# driver/executor broadcast and the cell-bucketed salted SMJ path wins
-BROADCAST_MAX_COVER_ROWS = 4_000_000
+# the engine's one broadcast ceiling, in ESTIMATED exploded rows: the
+# polygon cover here and in polygon_join, the query disks in
+# knn.knn_join / knn.within_distance_join. Past it the exploded side no
+# longer fits a sane driver/executor broadcast (~4M rows × ~50B ≈ 200MB;
+# a 10^7-query batch or a 10^6-polygon vector side would OOM every
+# executor if broadcast blindly — VERDICT r1/r2) and the operator falls
+# back to a cell-bucketed shuffle join. Every guard reads it as a module
+# attribute at call time, so one monkeypatch forces every fallback.
+BROADCAST_MAX_ROWS = 4_000_000
+
+# hot cells of the salted SMJ path are split into this many salt buckets
+SALT_FACTOR = 8
 
 # estimate memo keyed by the (immutable) region DataFrame instance —
 # callers reuse one dim frame across many joins, and the guard's one
@@ -215,7 +223,7 @@ def _pip_residual(cand: DataFrame) -> DataFrame:
 def spatial_join(points: DataFrame, regions: DataFrame, *,
                  point_id: str = "point_id", level: int = DEFAULT_LEVEL,
                  broadcast_regions: bool | None = None,
-                 salt_factor: int = 8, hot_min_count: int | None = None,
+                 hot_min_count: int | None = None,
                  compact_cover: bool = False,
                  keep_point_cols: list[str] | None = None) -> DataFrame:
     """Exact point-in-polygon join.
@@ -230,14 +238,14 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     point side never shuffles. False → cell-bucketed shuffle join with
     explicit salting of hot cells (G10): a frequency pre-pass over the point
     side finds cells above ``hot_min_count`` (default: 20x the mean cell
-    occupancy), only those get salted by ``salt_factor``.
+    occupancy), only those get salted into ``SALT_FACTOR`` buckets.
 
     broadcast_regions=None (default) SIZE-GUARDS the choice (VERDICT r2
     perf-weak fix): one cheap agg over the region side's bbox columns
     estimates the exploded cover row count (bbox cell-span product is a
     conservative superset of the actual cover, which only keeps cells
     intersecting the ring) and broadcasts only when the estimate fits
-    ``BROADCAST_MAX_COVER_ROWS`` — so a caller passing a 10^6-polygon
+    ``BROADCAST_MAX_ROWS`` — so a caller passing a 10^6-polygon
     vector side with defaults gets the salted SMJ path instead of an OOM.
     The guard reads ONLY the four bbox columns (the cover UDF does not
     run) and costs one count-style job.
@@ -259,7 +267,7 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
     if broadcast_regions is None:
         # memo key: the caller's (immutable) frame, not a prepared one
         broadcast_regions = (_cover_estimate(regions, level)
-                             <= BROADCAST_MAX_COVER_ROWS)
+                             <= BROADCAST_MAX_ROWS)
     cov = _region_cover(regions, level,
                         compact=broadcast_regions and compact_cover)
 
@@ -299,8 +307,8 @@ def spatial_join(points: DataFrame, regions: DataFrame, *,
         hot = cell_counts.filter(F.col("count") > hot_min_count) \
             .select("cell", F.col("count").alias("hot_count"))
         cand = salted_join(
-            pts, cov, "cell", hot=hot, factor=salt_factor,
-            big_salt_expr=F.pmod(F.hash(F.col(point_id)), F.lit(salt_factor)))
+            pts, cov, "cell", hot=hot, factor=SALT_FACTOR,
+            big_salt_expr=F.pmod(F.hash(F.col(point_id)), F.lit(SALT_FACTOR)))
 
     # keep_point_cols ride for free: the candidate join already carries
     # every point column, so consumers (e.g. zonal_stats) avoid a second
@@ -339,7 +347,6 @@ def polygons_intersect_udf(ring_a: Column, holes_a: Column | None,
 
 def polygon_join(left: DataFrame, right: DataFrame, *,
                  level: int = DEFAULT_LEVEL,
-                 broadcast_right: bool | None = None,
                  predicate: str = "intersects") -> DataFrame:
     """Polygon ⋈ polygon join (G16): (l_id, r_id) pairs of polygons
     whose regions (outer minus holes, boundary-inclusive) satisfy
@@ -368,9 +375,7 @@ def polygon_join(left: DataFrame, right: DataFrame, *,
     both orders and the diagonal).
     """
     L, R = _prep_regions(left), _prep_regions(right)
-    if broadcast_right is None:
-        broadcast_right = (_cover_estimate(right, level)
-                           <= BROADCAST_MAX_COVER_ROWS)
+    bcast = _cover_estimate(right, level) <= BROADCAST_MAX_ROWS
 
     def _cov(df, out_id):
         return (df.withColumn("cell", F.explode(polygon_cover_udf(
@@ -379,7 +384,7 @@ def polygon_join(left: DataFrame, right: DataFrame, *,
 
     cov_l = _cov(L, "l_id")
     cov_r = _cov(R, "r_id")
-    j = cov_l.join(F.broadcast(cov_r) if broadcast_right else cov_r, "cell")
+    j = cov_l.join(F.broadcast(cov_r) if bcast else cov_r, "cell")
     pairs = j.select("l_id", "r_id").distinct()
 
     def _geo(df, out_id, sfx):
@@ -395,7 +400,7 @@ def polygon_join(left: DataFrame, right: DataFrame, *,
     rgeo = _geo(R, "r_id", "_r")
     cand = (pairs
             .join(_geo(L, "l_id", "_l"), "l_id")
-            .join(F.broadcast(rgeo) if broadcast_right else rgeo, "r_id"))
+            .join(F.broadcast(rgeo) if bcast else rgeo, "r_id"))
     cand = cand.filter(
         (F.col("lat_min_l") <= F.col("lat_max_r"))
         & (F.col("lat_min_r") <= F.col("lat_max_l"))

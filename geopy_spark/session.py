@@ -104,8 +104,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
 
 TPCH_TABLES = ("region", "nation", "customer", "supplier", "part",
                "orders", "lineitem", "events", "documents", "embeddings")
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TPCH_TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

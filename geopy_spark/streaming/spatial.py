@@ -19,7 +19,7 @@ Scale notes (10^12-image firehose): per-batch work is a narrow map +
 broadcast hash join — no shuffle before the windowed aggregation, whose
 state is bounded by (windows in watermark horizon) × (polygons), not by
 input rows. The static cover must fit a broadcast (same
-BROADCAST_MAX_COVER_ROWS bound as batch); for continental vector sides,
+BROADCAST_MAX_ROWS bound as batch); for continental vector sides,
 use foreach_batch_spatial_join, which runs the batch operator (salted
 cell-SMJ path and all) per micro-batch.
 """
@@ -111,7 +111,7 @@ def foreach_batch_spatial_join(stream: DataFrame, regions: DataFrame, *,
                                keep_point_cols: list[str] | None = None,
                                **spatial_join_kwargs):
     """Continental-scale fallback (VERDICT r4 #5): when the polygon
-    cover exceeds BROADCAST_MAX_COVER_ROWS, the stream-static broadcast
+    cover exceeds BROADCAST_MAX_ROWS, the stream-static broadcast
     join of spatial_join_stream is off the table — instead run the full
     BATCH operator (size guard, salted cell-SMJ path, AQE skew handling
     and all) on each micro-batch via foreachBatch.

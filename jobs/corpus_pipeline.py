@@ -7,8 +7,8 @@ operators end-to-end with the same icetab snapshot/resume discipline:
 
 Stages (each one atomic snapshot; --resume skips committed ones):
   1. features   — lang-id, quality score, whitespace + BPE token counts,
-                  content fingerprint per doc (single-pass mapInPandas by
-                  default; one narrow scan, zero shuffles).
+                  content fingerprint per doc (single-pass mapInPandas;
+                  one narrow scan, zero shuffles).
   2. exact_dups — normalized-fingerprint duplicate groups, aggregated
                   straight off the committed features partition (its fp
                   is parity-pinned to fingerprint(text)) — one hash agg
@@ -83,11 +83,6 @@ def build_args(argv=None):
                          "across 8 tasks pinned the CPU-dense features stage "
                          "to ~2.9 effective cores at local[8]. Finer splits "
                          "re-balance WITHOUT shuffling document bodies.")
-    ap.add_argument("--features-impl", choices=["pandas", "codegen"],
-                    default="pandas",
-                    help="stage-1 implementation: single-pass mapInPandas "
-                         "(default; 5.1x faster, scales with the python "
-                         "workers) or the JVM Column-algebra twin")
     ap.add_argument("--exact-components", action="store_true",
                     help="near-dup pruning by exact connected components "
                          "(operators/graph) instead of the min-id pair rule")
@@ -120,8 +115,9 @@ def doc_features(docs, impl: str = "pandas"):
     the Column chain on 300k docs AND it moves the CPU into python
     workers, the part of the engine whose N->4N scaling holds at 0.84+
     (the codegen chain scaled at 2.24x/4 slots on this shared-socket
-    host: BENCH/BASELINE.md round-2 finding #2). impl='codegen' keeps
-    the JVM Column-algebra twin; pytest pins both to identical output."""
+    host: BENCH/BASELINE.md round-2 finding #2). The job always runs
+    'pandas'; impl='codegen' keeps the JVM Column-algebra twin as the
+    reference that pytest pins the pandas output against."""
     if impl == "pandas":
         from geopy_spark.functions.textbatch import doc_features_batch
         return doc_features_batch(docs)
@@ -142,8 +138,8 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
         spark = get_spark("corpus_pipeline", cores=args.cores,
                           shuffle_partitions=args.shuffle_partitions)
     # runtime-settable; scoped to this job's reads (see --max-partition-bytes)
-    mpb = getattr(args, "max_partition_bytes", 8 * 1024 * 1024)
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
+    spark.conf.set("spark.sql.files.maxPartitionBytes",
+                   str(args.max_partition_bytes))
     spark.conf.set("spark.sql.files.openCostInBytes", str(1024 * 1024))
     t0 = time.monotonic()
     run_id = uuid.uuid4().hex[:12]
@@ -154,8 +150,8 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
 
     params = {"min_quality": args.min_quality, "threshold": args.threshold,
               "num_perm": args.num_perm, "bands": args.bands,
-              "exact_components": bool(getattr(args, "exact_components", False)),
-              "pack_budget": getattr(args, "pack_budget", None),
+              "exact_components": args.exact_components,
+              "pack_budget": args.pack_budget,
               "input": os.path.abspath(args.input), "layout": 1}
     prev = table.properties()
     if args.resume and prev and prev.get("params") != params:
@@ -176,12 +172,11 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
         stage_s[stage] = round(time.monotonic() - s0, 3)
         _maybe_fail(args, stage)
 
-    # ---- stage 1: per-doc features (map-only, codegen)
+    # ---- stage 1: per-doc features (map-only, one mapInPandas pass)
     if "features" not in committed:
-        impl = getattr(args, "features_impl", "pandas")
         _timed("features", lambda: table.commit(
             [table.write_partition(
-                doc_features(docs, impl).sortWithinPartitions("doc_id"),
+                doc_features(docs).sortWithinPartitions("doc_id"),
                 "features")], run_id))
 
     feats = table.read_partition(spark, "features")
@@ -238,9 +233,9 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
             [table.write_partition(pairs, "near_pairs")], run_id))
 
     pairs = table.read_partition(spark, "near_pairs")
-    if getattr(args, "exact_components", False):
+    if args.exact_components:
         # exact semantics: component = min doc_id of the WHOLE duplicate
-        # cluster (operators/graph, iterative hash-min); drop everything
+        # cluster (operators/graph); drop everything
         # that is not its component's representative
         from geopy_spark.operators.graph import connected_components
         comp = connected_components(pairs)
@@ -285,7 +280,7 @@ def run(args, spark=None, stop_session: bool = True) -> dict:
     # ---- stage 6 (opt-in): pack survivors into fixed-budget training
     # sequences per language (operators/trainprep concat-and-chunk) —
     # the handoff artifact a pretraining loader consumes
-    if getattr(args, "pack_budget", None) and "sequences" not in committed:
+    if args.pack_budget and "sequences" not in committed:
         from geopy_spark.operators.trainprep import pack_sequences
         pk_in = surv_feats.select("doc_id", "lang", "n_tokens")
         _timed("sequences", lambda: table.commit(

@@ -1,11 +1,27 @@
 """connected_components (operators/graph): exact equivalence with a
 python union-find on random graphs, long-path convergence, and the
-fixpoint guard."""
+fixpoint guard. The star loop only runs above the DRIVER_CC_MAX_EDGES
+size guard, so its tests force it by patching the guard to 0."""
 
 import numpy as np
 import pytest
 
+import geopy_spark.operators.graph as G
 from geopy_spark.operators.graph import connected_components
+
+
+def _force_star(monkeypatch):
+    """Edge cap below any non-empty graph, so the guard picks the star
+    loop; returns the list the _cc_star spy appends to per call."""
+    calls = []
+    star = G._cc_star
+
+    def spy(*a, **k):
+        calls.append(1)
+        return star(*a, **k)
+    monkeypatch.setattr(G, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(G, "_cc_star", spy)
+    return calls
 
 
 def _union_find(edges, nodes):
@@ -29,32 +45,38 @@ def _union_find(edges, nodes):
     return {n: min(members) for r, members in comp.items() for n in members}
 
 
-@pytest.mark.parametrize("algorithm", ["star"])
+@pytest.mark.parametrize("path", ["star", "driver"])
 @pytest.mark.parametrize("seed,n_nodes,n_edges", [(1, 200, 150), (2, 500, 700)])
-def test_cc_matches_union_find_random(spark, algorithm, seed, n_nodes, n_edges):
+def test_cc_matches_union_find_random(spark, monkeypatch, path, seed,
+                                      n_nodes, n_edges):
     rng = np.random.default_rng(seed)
     edges = [(int(a), int(b)) for a, b in
              rng.integers(0, n_nodes, (n_edges, 2)) if a != b]
     df = spark.createDataFrame(edges, "a long, b long")
+    star_calls = _force_star(monkeypatch) if path == "star" else []
     got = {r.node: r.component
-           for r in connected_components(df, algorithm=algorithm).collect()}
+           for r in connected_components(df).collect()}
+    assert star_calls == ([1] if path == "star" else [])
     nodes = sorted({x for e in edges for x in e})
     exp = _union_find(edges, nodes)
     assert got == exp
 
 
-def test_cc_star_1000_node_path(spark):
-    """VERDICT r2 #4: the default (star) algorithm must resolve a
-    1000-node path graph — diameter 999, beyond any per-round label
-    propagation at max_iter=30 — in O(log n) rounds."""
+def test_cc_star_1000_node_path(spark, monkeypatch):
+    """VERDICT r2 #4: the star loop must resolve a 1000-node path graph
+    — diameter 999, beyond any per-round label propagation at
+    max_iter=30 — in O(log n) rounds (guard patched so the star loop,
+    not the driver union-find, runs)."""
     edges = [(i, i + 1) for i in range(999)]
     df = spark.createDataFrame(edges, "a long, b long")
+    star_calls = _force_star(monkeypatch)
     out = connected_components(df, max_iter=20).collect()
+    assert star_calls == [1]
     assert {r.component for r in out} == {0}
     assert len(out) == 1000
 
 
-def test_cc_reliable_checkpoint_dir(spark, tmp_path):
+def test_cc_reliable_checkpoint_dir(spark, tmp_path, monkeypatch):
     """checkpoint_dir switches per-round truncation to RELIABLE
     checkpoint() files under the given dir (executor-loss-safe on a real
     cluster); results are identical and files actually land there."""
@@ -62,24 +84,25 @@ def test_cc_reliable_checkpoint_dir(spark, tmp_path):
     edges = [(i, i + 1) for i in range(50)] + [(200, 201), (201, 202)]
     df = spark.createDataFrame(edges, "a long, b long")
     ckdir = str(tmp_path / "cc_ckpt")
-    # algorithm pinned to "star": the reliable-checkpoint machinery only
-    # exists on the iterative distributed paths — "auto" solves a graph
-    # this small on the driver, where there is no iteration to protect
-    got = {r.node: r.component
-           for r in connected_components(df, algorithm="star",
-                                         checkpoint_dir=ckdir).collect()}
     exp = {r.node: r.component for r in connected_components(df).collect()}
+    # star loop forced: the reliable-checkpoint machinery only exists on
+    # the iterative distributed path — the default solves a graph this
+    # small on the driver, where there is no iteration to protect
+    _force_star(monkeypatch)
+    got = {r.node: r.component
+           for r in connected_components(df, checkpoint_dir=ckdir).collect()}
     assert got == exp
     assert any(files for _, _, files in os.walk(ckdir))
 
 
-def test_cc_fixpoint_guard_raises(spark):
+def test_cc_fixpoint_guard_raises(spark, monkeypatch):
     """A 13-node path needs more than two star rounds (the last round
     only confirms the fixpoint): the cap must raise, not truncate."""
     edges = [(i, i + 1) for i in range(12)]
     df = spark.createDataFrame(edges, "a long, b long")
+    _force_star(monkeypatch)
     with pytest.raises(RuntimeError, match="no fixpoint"):
-        connected_components(df, algorithm="star", max_iter=2)
+        connected_components(df, max_iter=2)
 
 
 def test_edge_signature_order_insensitive_and_discriminating(spark):
@@ -102,9 +125,9 @@ def test_edge_signature_order_insensitive_and_discriminating(spark):
     assert _edge_signature(a) != _edge_signature(d)
 
 
-def test_cc_auto_driver_matches_star(spark):
-    """The size-guarded driver union-find ("auto" below the edge cap)
-    must label identically to the distributed star loop: random sparse
+def test_cc_auto_driver_matches_star(spark, monkeypatch):
+    """The size-guarded driver union-find (the default below the edge
+    cap) must label identically to the distributed star loop: random sparse
     graph with chains, cliques, self-loops and isolated-by-self-loop
     nodes."""
     import random
@@ -116,13 +139,9 @@ def test_cc_auto_driver_matches_star(spark):
               for _ in range(60)]
     df = spark.createDataFrame(edges, "a long, b long")
     auto = {r.node: r.component
-            for r in connected_components(df, algorithm="auto").collect()}
+            for r in connected_components(df).collect()}
+    star_calls = _force_star(monkeypatch)
     star = {r.node: r.component
-            for r in connected_components(df, algorithm="star").collect()}
+            for r in connected_components(df).collect()}
+    assert star_calls == [1]
     assert auto == star
-    # above the guard the distributed loop must still be the one running
-    # (smoke: force a 1-edge cap and check results are unchanged)
-    capped = {r.node: r.component
-              for r in connected_components(df, algorithm="auto",
-                                            driver_max_edges=1).collect()}
-    assert capped == star

@@ -64,7 +64,8 @@ def _brute(a_pdf, b_pdf):
     return out
 
 
-def test_operator_matches_brute_force_all_pairs(spark, fixtures):
+def test_operator_matches_brute_force_all_pairs(spark, fixtures,
+                                               monkeypatch):
     """The distributed plan (cover equi-join → distinct ids → geometry
     re-join → bbox prune → kernel residual) must equal exhaustive
     kernel evaluation over all 20×16 pairs — this is where candidate
@@ -75,10 +76,11 @@ def test_operator_matches_brute_force_all_pairs(spark, fixtures):
     got = {(r.l_id, r.r_id)
            for r in polygon_join(left, right, level=6).collect()}
     assert got == _brute(a_pdf, b_pdf) and len(got) > 0
-    # both broadcast paths agree
+    # the shuffle path (broadcast ceiling patched to 0) agrees
+    from geopy_spark.operators import spatial_join as SJ
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_ROWS", 0)
     got_smj = {(r.l_id, r.r_id)
-               for r in polygon_join(left, right, level=6,
-                                     broadcast_right=False).collect()}
+               for r in polygon_join(left, right, level=6).collect()}
     assert got_smj == got
 
 

@@ -58,7 +58,7 @@ def test_spatial_join_auto_broadcast_guard(spark, points_pdf, polys, monkeypatch
     assert "_salt" not in plan_text(auto)
 
     # cap forced below any estimate → salted fallback, equal results
-    monkeypatch.setattr(SJ, "BROADCAST_MAX_COVER_ROWS", 0)
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_ROWS", 0)
     fb = SJ.spatial_join(pts, regions, point_id="point_id", level=7)
     assert "_salt" in plan_text(fb)
     exp = set(map(tuple, SJ.spatial_join(
@@ -110,18 +110,35 @@ def test_knn_hotspot_skew(spark, points_pdf):
     assert len(cnt) == 8 and all(r.n == 3 for r in cnt)
 
 
-def test_knn_nonbroadcast_path_equals_broadcast(spark, points_pdf):
-    """broadcast_max_cells=0 forces the shuffle-join fallback in BOTH
-    phases (the 10^7-query guard, VERDICT r1) — results must be identical
-    to the broadcast fan-out path."""
+def _spy_fanout(monkeypatch):
+    """Record the broadcast decision of every knn fan-out join."""
+    from geopy_spark.operators import knn as KNN
+    seen = []
+    orig = KNN._candidates
+
+    def spy(*a, **k):
+        seen.append(k["broadcast_q"])
+        return orig(*a, **k)
+    monkeypatch.setattr(KNN, "_candidates", spy)
+    return seen
+
+
+def test_knn_nonbroadcast_path_equals_broadcast(spark, points_pdf,
+                                                monkeypatch):
+    """A zero broadcast ceiling forces the phase-2 fan-out join onto its
+    shuffle fallback (the 10^7-query guard, VERDICT r1) — results must be
+    identical to the broadcast fan-out path."""
+    from geopy_spark.operators import spatial_join as SJ
     qpdf = synth.make_knn_queries_pdf(12)
     pts = spark.createDataFrame(points_pdf.rename(columns={"point_id": "id"}))
     qs = spark.createDataFrame(qpdf)
+    seen = _spy_fanout(monkeypatch)
     a = {(r.query_id, r.neighbor_id, r["rank"])
          for r in knn_join(qs, pts, k=4, level=4, point_id="id").collect()}
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_ROWS", 0)
     b = {(r.query_id, r.neighbor_id, r["rank"])
-         for r in knn_join(qs, pts, k=4, level=4, point_id="id",
-                           broadcast_max_cells=0).collect()}
+         for r in knn_join(qs, pts, k=4, level=4, point_id="id").collect()}
+    assert seen == [True, False]
     assert a == b and len(a) == 12 * 4
 
 
@@ -195,3 +212,28 @@ def test_within_distance_join_exact_vs_bruteforce(spark, points_pdf):
                 want.add((q.query_id, pid))
         assert got == want, (radius_km, level)
         assert len(want) > 0
+
+
+def test_within_distance_join_shuffle_fallback(spark, points_pdf,
+                                               monkeypatch):
+    """A zero broadcast ceiling forces the within-distance fan-out onto
+    its shuffle fallback; the pairs must equal the default (broadcast)
+    path's. Only the operator's decision is checked, not the physical
+    join: Spark's autoBroadcastJoinThreshold may still broadcast a side
+    this small on its own."""
+    from geopy_spark.operators import spatial_join as SJ
+    from geopy_spark.operators.knn import within_distance_join
+    qdf = spark.createDataFrame(synth.make_knn_queries_pdf(12))
+    pts = spark.createDataFrame(points_pdf.rename(
+        columns={"point_id": "id"}))
+    seen = _spy_fanout(monkeypatch)
+
+    def pairs():
+        return {(r.query_id, r.id, r.dist_m)
+                for r in within_distance_join(qdf, pts, 800_000.0, level=5,
+                                              point_id="id").collect()}
+    a = pairs()
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_ROWS", 0)
+    b = pairs()
+    assert seen == [True, False]
+    assert a == b and len(a) > 0

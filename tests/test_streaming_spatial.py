@@ -211,7 +211,7 @@ def test_foreach_batch_fallback_matches_batch(spark, tmp_path, regions_pdf,
     import geopy_spark.operators.spatial_join as SJ
     from geopy_spark.operators import skew
 
-    monkeypatch.setattr(SJ, "BROADCAST_MAX_COVER_ROWS", 0)
+    monkeypatch.setattr(SJ, "BROADCAST_MAX_ROWS", 0)
     salted_calls = []
     orig_salted = skew.salted_join
 
